@@ -340,7 +340,7 @@ def _q_embedding_near_dup_clusters(spark, sf_dir):
 
 def _q_embedding_near_dup_clusters_ann(spark, sf_dir):
     """Production embedding near-dup CLUSTERS: ANN-bucketed pairs ->
-    pointer-jumping connected components.  Rows-only (LSH candidates); the
+    connected_components.  Rows-only (LSH candidates); the
     exact twin embedding_near_dup_clusters is the recursive-CTE-oracled
     counterpart."""
     from set_sketch_paper_spark.operators.clustering import connected_components

@@ -136,38 +136,6 @@ def make_hyperminhash_cardinality_udf(cfg, method: str = "new"):
     return _udf
 
 
-def make_minhash_of_longs_udf(mh: MinHashConfig):
-    """elements:array<long> -> sig:array<long>.
-
-    For sketching pre-hashed element sets (e.g. user ids), the grouped
-    partial-aggregate path.
-    """
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _udf(elements: pd.Series) -> pd.Series:
-        lists = [np.asarray(e if e is not None else [], dtype=np.int64) for e in elements]
-        values = u64_from_i64(np.concatenate(lists) if lists else np.empty(0, np.int64))
-        offsets = np.cumsum([0] + [len(x) for x in lists])
-        sigs, _ = minhash_batch(values, offsets, mh.num_registers, mh.seed, mh.algo)
-        return pd.Series(list(u64_to_i64(sigs)))
-
-    return _udf
-
-
-def make_ghll_of_longs_udf(cfg: GHLLConfig):
-    """elements:array<long> -> binary GHLL registers."""
-
-    @F.pandas_udf(BinaryType())
-    def _udf(elements: pd.Series) -> pd.Series:
-        lists = [np.asarray(e if e is not None else [], dtype=np.int64) for e in elements]
-        values = u64_from_i64(np.concatenate(lists) if lists else np.empty(0, np.int64))
-        offsets = np.cumsum([0] + [len(x) for x in lists])
-        regs, _ = ghll_sketches_batch(values, offsets, cfg.num_registers, cfg.base, cfg.q, cfg.seed)
-        return pd.Series([r.tobytes() for r in regs])
-
-    return _udf
-
-
 def make_merge_registers_udf(cfg):
     """array-of-binary -> binary: element-wise max merge of register states
     (sketch.hpp:876-881) — the *final* stage of the algebraic aggregate."""

@@ -1,13 +1,12 @@
 """Connected components on an edge DataFrame (duplicate clustering).
 
-``connected_components`` runs min-label propagation accelerated with pointer
-jumping (path doubling): each round every node takes the minimum label among
-itself and its neighbors, then short-circuits through its current label's
-label.  Pointer jumping makes long chains converge in O(log diameter) rounds
-instead of O(diameter) — each round is a bounded number of key-partitioned
-shuffles, so the whole loop is ~2·log2(d) shuffles at any scale.
-``label_propagation`` is the plain O(diameter) variant kept as a simple
-reference implementation for tests.
+``connected_components`` has one distributed algorithm behind a
+size-adaptive fast path.  Edge sets of at most ``SMALL_GRAPH_EDGES`` edges
+are solved by one executor-side union-find.  Larger ones run the
+alternating large-star/small-star loop (Kiveris et al., "Connected
+Components in MapReduce and Beyond", SoCC'14 — the algorithm behind
+GraphFrames' connected components), which converges in O(log n) rounds
+even on long chains with permuted ids.
 
 localCheckpoint(eager) truncates the iterative lineage each round; without it
 Catalyst re-derives the full chain of joins every iteration and the plan
@@ -21,6 +20,12 @@ estimates into the cluster assignments required by the north rule
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+# edge sets up to this size take the single-task union-find path
+SMALL_GRAPH_EDGES = 1_000_000
+# round bound of the star loop (O(log n) rounds expected); hitting it raises
+# rather than returning half-merged clusters
+MAX_ROUNDS = 40
 
 
 def _symmetric(edges: DataFrame) -> DataFrame:
@@ -95,8 +100,8 @@ def _sever_plan_identity(df: DataFrame) -> DataFrame:
     a 25-round loop goes from 0.4s to 240s per round).  Re-wrapping the
     checkpointed RDD[InternalRow] in a fresh Dataset severs that identity
     chain entirely JVM-side — zero Python data movement — and keeps every
-    round at constant cost (validated in tests/test_clustering_star.py,
-    whose graphs need 10-25 rounds).  Falls back to the unmodified frame if
+    round at constant cost (validated by the multi-round graphs in
+    tests/test_clustering_star.py).  Falls back to the unmodified frame if
     the package-private hook is unavailable in a future Spark."""
     try:
         jdf = df._jdf
@@ -142,105 +147,40 @@ def _unionfind_partition(pdf):
     return pd.DataFrame({"id": verts, "cluster_id": [find(v) for v in verts]})
 
 
-def connected_components(
-    edges: DataFrame, max_iterations: int = 40, reliable: bool = False,
-    require_convergence: bool = True, small_graph_edges: int = 1_000_000,
-) -> DataFrame:
+def connected_components(edges: DataFrame, reliable: bool = False) -> DataFrame:
     """(id1, id2) undirected edges -> (id, cluster_id = min reachable id).
 
     Includes every vertex that appears in the edge list (callers union in
     isolated vertices as their own singleton clusters if needed).
 
     Size-adaptive fast path (r6, guide §1.2/§2.4): if the RAW edge list
-    fits a single task (count <= ``small_graph_edges``), the components are
+    fits a single task (count <= ``SMALL_GRAPH_EDGES``), the components are
     solved by ONE executor-side union-find (applyInPandas on a constant
     key) instead of a multi-round distributed loop — a verified near-dup
     edge set is orders of magnitude smaller than its corpus, and each loop
-    round costs two shuffles plus a materialization barrier that dwarf a
+    round costs shuffles plus a materialization barrier that dwarf a
     small graph's actual work (measured: the sf1.0 flagship's cluster
     stage dropped 7-9s -> ~1s).  The fast path consumes the raw edges
     directly: union-find is invariant under duplicate/reversed edges, so
-    the symmetric dedup shuffle + localCheckpoint the loop needs are
-    skipped entirely (second r6 step: ~0.5s warm + one plan off the cold
-    path).  Labels are identical (union-by-min root == min-label fixed
-    point; asserted against the loop in tests/test_clustering_star.py).
-    Beyond the threshold the pointer-jumping loop below runs unchanged —
-    at 100 TB both paths matter: the loop for genuinely huge edge sets,
-    the fast path for the common post-verification graph.  The decision
-    count is one aggregate-only pass over the edge subtree (no shuffle, no
+    no canonicalizing dedup shuffle or localCheckpoint is needed.  Labels
+    are identical (union-by-min root == min-label fixed point; asserted
+    against the loop in tests/test_clustering_star.py).  Beyond the
+    threshold the large-star/small-star loop runs.  The decision count is
+    one aggregate-only pass over the edge subtree (no shuffle, no
     materialization); callers whose edge lineage is expensive to recompute
     should checkpoint it first (the pipeline's inputs already are).
 
-    Per round: ONE neighborhood-min shuffle + ONE jump join, materialized
-    once; the convergence test rides the materialized frame (the old label
-    is carried as a column, so no separate old-vs-new join shuffle) and its
-    filter scan reads the just-checkpointed blocks.
-
-    Real near-dup graphs (dense clusters of duplicates) converge in a
-    handful of rounds, but adversarial id layouts — e.g. a long path with
-    randomly permuted vertex ids — defeat the label-pointer doubling and
-    need O(n) rounds.  Rather than silently returning HALF-MERGED clusters
-    when ``max_iterations`` is exhausted, this raises (default) and points
-    at ``connected_components_star``, which converges in O(log n) rounds on
-    exactly those graphs.  Set require_convergence=False to accept the
-    partial labels (every label is still a genuine reachable id — only the
-    minimality is unfinished).
+    ``reliable=True`` materializes the loop's rounds with reliable RDD
+    checkpoints instead of localCheckpoint (see ``_materialize``).
     """
     e2 = edges.select("id1", "id2")
-    if e2.count() <= small_graph_edges:
+    if e2.count() <= SMALL_GRAPH_EDGES:
         return (
             e2.withColumn("_g", F.lit(0))
             .groupBy("_g")
             .applyInPandas(_unionfind_partition, "id long, cluster_id long")
         )
-    trk = _RoundBlockTracker(edges.sparkSession, enabled=not reliable)
-    sym = trk.materialize(_symmetric_dedup(e2), reliable, pin=True)
-    labels = trk.materialize(
-        sym.groupBy(F.col("id1").alias("id"))
-        .agg(F.min("id2").alias("nmin"))
-        .select("id", F.least("id", "nmin").alias("label")),
-        reliable,
-    )
-
-    converged = False
-    for _ in range(max_iterations):
-        # 1) take the min label over the neighborhood
-        nbr = (
-            sym.join(labels.withColumnRenamed("id", "id2"), "id2")
-            .groupBy(F.col("id1").alias("id"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        stepped = labels.join(nbr, "id", "left").select(
-            "id",
-            F.col("label").alias("old_label"),
-            F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
-        )
-        # 2) pointer jump: label <- label(label)
-        jump_src = stepped.select(F.col("id").alias("jid"), F.col("label").alias("jlabel"))
-        jumped = trk.materialize(
-            stepped.join(jump_src, stepped.label == jump_src.jid, "left").select(
-                "id",
-                "old_label",
-                F.least(F.col("label"), F.coalesce("jlabel", "label")).alias("label"),
-            ),
-            reliable,
-        )
-        labels = jumped.select("id", "label")
-        if jumped.filter(F.col("label") != F.col("old_label")).isEmpty():
-            converged = True
-            break
-    if not converged and require_convergence:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "rounds — the graph's min-label chains defeat pointer jumping; "
-            "use connected_components_star (O(log n) rounds on such graphs) "
-            "or raise max_iterations / pass require_convergence=False"
-        )
-    return labels.select("id", F.col("label").alias("cluster_id"))
-
-
-def _symmetric_dedup(edges: DataFrame) -> DataFrame:
-    return _symmetric(edges).dropDuplicates(["id1", "id2"])
+    return _star_components(e2, reliable)
 
 
 def _edge_set_stats(e: DataFrame):
@@ -257,21 +197,16 @@ def _edge_set_stats(e: DataFrame):
     return row["n"], row["h"]
 
 
-def connected_components_star(
-    edges: DataFrame, max_iterations: int = 40, reliable: bool = False,
-    require_convergence: bool = True,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14) — the
-    alternative hook for graphs whose min-label chains defeat pointer
-    jumping's per-round doubling (VERDICT r2 #8).
+def _star_components(edges: DataFrame, reliable: bool = False) -> DataFrame:
+    """Alternating large-star/small-star connected components — the loop
+    behind ``connected_components`` for edge sets too large for one task.
 
     Edge set is held canonically as (id1 > id2); each round is two grouped
     min-aggregations + id-keyed joins, the edge count is non-increasing, and
     at the fixed point every component is a star centered at its minimum id.
     Output: (id, cluster_id = min reachable id) for every vertex in the
-    input edge list — identical semantics to ``connected_components``
-    (asserted on shared graphs in tests/test_clustering_star.py).
+    input edge list.  Raises rather than returning half-merged clusters if
+    ``MAX_ROUNDS`` rounds do not reach the fixed point.
     """
     trk = _RoundBlockTracker(edges.sparkSession, enabled=not reliable)
     verts = trk.materialize(
@@ -291,8 +226,7 @@ def connected_components_star(
     )
 
     e_stats = _edge_set_stats(e)
-    converged = False
-    for _ in range(max_iterations):
+    for _ in range(MAX_ROUNDS):
         # LARGE-STAR: per node u over its FULL neighborhood, link every
         # strictly-larger neighbor v to m = min(N(u) ∪ {u})
         sym = _symmetric(e)
@@ -324,63 +258,16 @@ def connected_components_star(
             .filter(F.col("id1") != F.col("id2"))
             .dropDuplicates(["id1", "id2"])
         )
-        new_e = trk.materialize(small, reliable)
-        new_stats = _edge_set_stats(new_e)
-        e = new_e
+        e = trk.materialize(small, reliable)
+        new_stats = _edge_set_stats(e)
         if new_stats == e_stats:
-            converged = True
             break
         e_stats = new_stats
-    if not converged and require_convergence:
+    else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iterations} "
-            "rounds — raise max_iterations (O(log n) expected) or pass "
-            "require_convergence=False to accept partial star edges"
+            f"connected components did not converge in {MAX_ROUNDS} rounds"
         )
-    if not converged:
-        # Partial labels: a vertex can carry several star edges with
-        # conflicting roots; keep the minimum per id so output stays 1 row
-        # per vertex (ADVICE r3).
-        e = e.groupBy("id1").agg(F.min("id2").alias("id2"))
 
-    labels = verts.join(
+    return verts.join(
         e.select(F.col("id1").alias("id"), F.col("id2").alias("root")), "id", "left"
     ).select("id", F.coalesce("root", "id").alias("cluster_id"))
-    return labels
-
-
-def label_propagation(edges: DataFrame, max_iterations: int = 30) -> DataFrame:
-    """Plain min-label propagation: O(diameter) rounds, used as the simple
-    cross-check implementation in tests."""
-    sym = _materialize(_symmetric(edges).dropDuplicates(["id1", "id2"]), False)
-    labels = _materialize(
-        sym.select(F.col("id1").alias("id")).distinct().withColumn("label", F.col("id")),
-        False,
-    )
-
-    for _ in range(max_iterations):
-        nbr_min = (
-            sym.join(labels.withColumnRenamed("id", "id2"), "id2")
-            .groupBy(F.col("id1").alias("id"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(nbr_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-        )
-        new_labels = _materialize(new_labels, False)
-        converged = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .isEmpty()
-        )
-        labels = new_labels
-        if converged:
-            break
-    return labels.select("id", F.col("label").alias("cluster_id"))

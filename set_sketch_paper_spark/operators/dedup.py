@@ -15,41 +15,13 @@ hottest key's frequency, which at 100 TB is a stop-gram in ~every document.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType
 
 from ..config import PipelineConfig, ShingleConfig
 from ..functions.udfs import make_minhash_pair_estimator_udf
 from ..operators import lsh as lsh_ops
 from ..operators.signatures import with_content_sha, with_minhash_signature
-
-
-def exact_duplicate_groups(
-    df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
-) -> DataFrame:
-    """Groups of byte-identical content: (content_sha, dup_count, keep_id).
-
-    One hash-aggregate shuffle on the sha; Catalyst prunes everything but
-    (id, content) from the scan.
-    """
-    hashed = with_content_sha(df, content_col).select(id_col, "content_sha")
-    return hashed.groupBy("content_sha").agg(
-        F.count(F.lit(1)).alias("dup_count"),
-        F.min(id_col).alias("keep_id"),
-    )
-
-
-def exact_dedup(
-    df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
-) -> DataFrame:
-    """Representative rows only (min id per identical content)."""
-    hashed = with_content_sha(df, content_col)
-    w = Window.partitionBy("content_sha")
-    return (
-        hashed.withColumn("_keep", F.min(id_col).over(w))
-        .filter(F.col(id_col) == F.col("_keep"))
-        .drop("_keep")
-    )
 
 
 def exact_dedup_against_snapshot(

@@ -312,6 +312,12 @@ def kmv_distinct(
     from ..operators.signatures import widen_if_narrow
 
     keys = [keys] if isinstance(keys, str) else list(keys)
+    clash = sorted({"__v", "__h"} & set(keys))
+    if clash:
+        raise ValueError(
+            f"kmv_distinct key column(s) {clash} clash with its internal "
+            "value/hash columns; rename them first"
+        )
     # Project to (keys, value) FIRST, then widen, then hash: widening the
     # RAW frame was tried and reverted in r6 (the repartition carried every
     # event column — 2.6-3.0s unwidened vs 3.5-8.0s widened at sf1.0), but

@@ -107,12 +107,3 @@ def oracle_near_dup(
         uf.union(a, b)
     clusters = {i: uf.find(i) for i in uf.parent}
     return pairs, clusters
-
-
-def pair_recall(got_pairs, truth_pairs) -> float:
-    """|got ∩ truth| / |truth| over canonicalized id pairs."""
-    truth = {(min(a, b), max(a, b)) for a, b in truth_pairs}
-    if not truth:
-        return 1.0
-    got = {(min(a, b), max(a, b)) for a, b in got_pairs}
-    return len(got & truth) / len(truth)

@@ -38,11 +38,6 @@ def splitmix64(x: np.ndarray) -> np.ndarray:
     return z
 
 
-def mix_pair(x: np.ndarray, y) -> np.ndarray:
-    """Combine two 64-bit values into one well-mixed value."""
-    return splitmix64(np.asarray(x, dtype=U64) ^ (np.asarray(y, dtype=U64) * _MIX2))
-
-
 def derive_keys(seed: int, n: int) -> np.ndarray:
     """n deterministic 64-bit keys from a seed (one per register/band).
 
@@ -92,22 +87,3 @@ def exponential_from_u64(x: np.ndarray) -> np.ndarray:
     """
     u = u64_to_unit(x)
     return -np.log1p(-u)
-
-
-def hash_bytes_u64(data: bytes, seed: int = 0) -> int:
-    """Deterministic 64-bit hash of a byte string (FNV-1a folded through
-    splitmix64).  Used for driver-side ids; row-level hashing in Spark uses
-    the built-in xxhash64 instead (JVM-side)."""
-    with np.errstate(over="ignore"):
-        h = np.uint64(0xCBF29CE484222325) ^ np.uint64(seed & 0xFFFFFFFFFFFFFFFF)
-        prime = np.uint64(0x100000001B3)
-        arr = np.frombuffer(data, dtype=np.uint8)
-        # fold 8-byte chunks for speed; tail bytes one by one
-        n8 = (len(arr) // 8) * 8
-        if n8:
-            words = arr[:n8].view("<u8")
-            for w in words:  # data-dependent chain, cannot vectorize; ids are short
-                h = (h ^ w) * prime
-        for b in arr[n8:]:
-            h = (h ^ np.uint64(b)) * prime
-        return int(splitmix64(np.asarray([h], dtype=U64))[0])

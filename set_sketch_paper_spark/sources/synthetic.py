@@ -165,17 +165,3 @@ def files_table(spark, n_rows: int, seed: int = 42, partitions: int | None = Non
             yield gen_rows(pdf["id"].tolist(), n_rows, seed, token_scale)
 
     return spark.range(0, n_rows, numPartitions=partitions).mapInPandas(gen, schema)
-
-
-def truth_clusters_pandas(n_rows: int) -> pd.DataFrame:
-    """(row_id, true_cluster): cluster = prototype row id for near/exact dup
-    rows, self for background; substring/boilerplate rows are their own
-    cluster (not whole-file near-dups)."""
-    out = []
-    for row_id in range(n_rows):
-        kind = row_kind(row_id)
-        if kind in (KIND_NEAR, KIND_EXACT):
-            out.append((row_id, prototype_of(row_id, n_rows), kind))
-        else:
-            out.append((row_id, row_id, kind))
-    return pd.DataFrame(out, columns=["row_id", "true_cluster", "kind"])

@@ -19,10 +19,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
 def read_csv(spark: SparkSession, path: str, schema: str | None = None,
              header: bool = True, sep: str = ",") -> DataFrame:
     """CSV source (the reference's python charts read `;`-separated result

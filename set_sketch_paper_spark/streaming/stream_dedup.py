@@ -52,12 +52,6 @@ def stream_exact_dedup(
     )
 
 
-def stream_signatures(stream: DataFrame, pcfg: PipelineConfig, content_col: str = "content") -> DataFrame:
-    """Stateless per-row signature map — identical UDF to the batch path, so
-    streamed signatures are bit-compatible with batch checkpoints."""
-    return with_minhash_signature(stream, pcfg, content_col)
-
-
 def _store_manifest_path(store_path: str) -> str:
     return os.path.join(store_path, "_STORE_MANIFEST.json")
 

@@ -22,7 +22,7 @@ from set_sketch_paper_spark.config import (
     PipelineConfig,
     ShingleConfig,
 )
-from set_sketch_paper_spark.operators.clustering import connected_components
+from set_sketch_paper_spark.operators.clustering import _star_components
 from set_sketch_paper_spark.plans.pipeline import NearDupPipeline
 from set_sketch_paper_spark.sources.synthetic import files_table
 
@@ -37,17 +37,17 @@ def _persistent_ids(spark) -> set[int]:
 
 
 def test_cc_loop_does_not_accumulate_round_blocks(spark):
-    # a 64-node path needs several pointer-jumping rounds
+    # a 64-node path needs several large-star/small-star rounds
     edges = spark.range(63).select(
         F.col("id").alias("id1"), (F.col("id") + 1).alias("id2")
     )
     base = _persistent_ids(spark)
-    # small_graph_edges=0 forces the iterative loop this test audits (the
-    # default would take the single-task union-find path on 63 edges)
-    labels = connected_components(edges, small_graph_edges=0)
+    # the loop itself: connected_components would take the single-task
+    # union-find path on 63 edges
+    labels = _star_components(edges)
     assert labels.filter(F.col("cluster_id") != 0).count() == 0
-    # steady state: pinned symmetric edges + final round (+1 slack for the
-    # initial-labels frame on a 1-round graph); NOT one block set per round
+    # steady state: pinned vertex set + final round's edges (+1 slack);
+    # NOT one block set per round
     assert len(_persistent_ids(spark) - base) <= 3
 
 

@@ -1,16 +1,19 @@
-"""Large-star/small-star CC vs pointer jumping vs plain label propagation:
-identical cluster assignments on shared graphs, including the adversarial
-long-chain shapes the star algorithm exists for."""
+"""Connected components: the union-find fast path, the large-star/
+small-star loop (plain and reliable-checkpoint) and the bare union-find
+kernel give identical cluster assignments on shared graphs, including the
+adversarial long-chain shapes the star algorithm exists for."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 
+from set_sketch_paper_spark.operators import clustering
 from set_sketch_paper_spark.operators.clustering import (
+    _star_components,
+    _unionfind_partition,
     connected_components,
-    connected_components_star,
-    label_propagation,
 )
 
 
@@ -18,48 +21,47 @@ def _clusters(df):
     return {r["id"]: r["cluster_id"] for r in df.collect()}
 
 
-def _check_all_equal(spark, edge_rows, with_plain=False):
+def _check_all_equal(spark, edge_rows, tmp_path):
     edges = spark.createDataFrame(edge_rows, "id1 long, id2 long")
     a = _clusters(connected_components(edges))  # small-graph union-find path
-    a_loop = _clusters(connected_components(edges, small_graph_edges=0))
-    assert a == a_loop  # fast path == pointer-jumping loop
-    b = _clusters(connected_components_star(edges))
-    assert a == b
-    if with_plain:  # plain propagation is O(diameter) — small graphs only
-        assert a == _clusters(label_propagation(edges))
+    assert a == _clusters(_star_components(edges))  # fast path == loop
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
+    assert a == _clusters(_star_components(edges, reliable=True))
+    uf = _unionfind_partition(pd.DataFrame(edge_rows, columns=["id1", "id2"]))
+    assert a == dict(zip(uf["id"].tolist(), uf["cluster_id"].tolist()))
     return a
 
 
-def test_star_cc_long_path(spark):
+def test_star_cc_long_path(spark, tmp_path):
     """A 300-node path with the minimum at one end — the worst case for
     naive min propagation (O(n) rounds) and the motivating shape for
     large-star/small-star."""
-    got = _check_all_equal(spark, [(i, i + 1) for i in range(1, 300)])
+    got = _check_all_equal(spark, [(i, i + 1) for i in range(1, 300)], tmp_path)
     assert set(got.values()) == {1}
     assert len(got) == 300
 
 
-def test_star_cc_shuffled_path(spark):
+def test_star_cc_shuffled_path(spark, tmp_path, monkeypatch):
     """Path whose vertex ids are randomly permuted: min-label chains zig-zag
-    and pointer jumping degenerates to ~O(n) rounds (measured ~120 on this
-    graph) — the star algorithm's motivating case.  Star must produce the
-    exact ground truth in its default iteration budget; pointer jumping must
-    REFUSE to return half-merged clusters."""
+    (pointer jumping needed ~110 rounds on this graph) — the star
+    algorithm's motivating case.  The loop must produce the exact ground
+    truth within its round bound, and must REFUSE to return half-merged
+    clusters when the bound is too small."""
     rng = np.random.RandomState(5)
     perm = rng.permutation(250).tolist()
     rows = [(int(perm[i]) + 10, int(perm[i + 1]) + 10) for i in range(249)]
-    edges = spark.createDataFrame(rows, "id1 long, id2 long")
-    got = _clusters(connected_components_star(edges))
+    got = _check_all_equal(spark, rows, tmp_path)
     assert set(got.values()) == {10}
     assert len(got) == 250
-    # the size-adaptive union-find path solves this graph outright; force
-    # the pointer-jumping loop to check it still refuses half-merged labels
-    assert _clusters(connected_components(edges)) == got
-    with pytest.raises(RuntimeError, match="connected_components_star"):
-        connected_components(edges, max_iterations=10, small_graph_edges=0)
+    # past the fast-path threshold connected_components runs the loop
+    monkeypatch.setattr(clustering, "SMALL_GRAPH_EDGES", 0)
+    monkeypatch.setattr(clustering, "MAX_ROUNDS", 2)
+    edges = spark.createDataFrame(rows, "id1 long, id2 long")
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components(edges)
 
 
-def test_star_cc_disjoint_cliques_and_singletable(spark):
+def test_star_cc_disjoint_cliques_and_singletable(spark, tmp_path):
     rng = np.random.RandomState(9)
     rows = []
     for base in (100, 200, 300):
@@ -69,23 +71,23 @@ def test_star_cc_disjoint_cliques_and_singletable(spark):
             if a != b:
                 rows.append((int(a), int(b)))
     rows.append((990, 991))  # an isolated 2-cycle component
-    got = _check_all_equal(spark, rows, with_plain=True)
+    got = _check_all_equal(spark, rows, tmp_path)
     assert got[990] == got[991] == 990
     assert {got[i] for i in range(100, 112)} == {100}
     assert {got[i] for i in range(200, 212)} == {200}
 
 
-def test_star_cc_random_graph(spark):
+def test_star_cc_random_graph(spark, tmp_path):
     rng = np.random.RandomState(11)
     rows = [
         (int(a), int(b))
         for a, b in rng.randint(0, 150, size=(250, 2))
         if a != b
     ]
-    _check_all_equal(spark, rows, with_plain=True)
+    _check_all_equal(spark, rows, tmp_path)
 
 
-def test_star_cc_star_input_fixed_point(spark):
+def test_star_cc_star_input_fixed_point(spark, tmp_path):
     """Already-star input converges in one round and is unchanged."""
-    got = _check_all_equal(spark, [(1, k) for k in range(2, 40)], with_plain=True)
+    got = _check_all_equal(spark, [(1, k) for k in range(2, 40)], tmp_path)
     assert set(got.values()) == {1}

@@ -84,6 +84,15 @@ def test_kmv_distinct_keeps_null_key_group(spark):
     assert out["a"] == bottom_k(range(20), 8)
 
 
+@pytest.mark.parametrize("key", ["__v", "__h"])
+def test_kmv_distinct_rejects_internal_column_names(spark, key):
+    """A caller key named like kmv_distinct's internal value/hash column is
+    refused by name, not left to an ambiguous-reference AnalysisException."""
+    df = spark.createDataFrame([(1, 2)], schema=f"{key} int, v int")
+    with pytest.raises(ValueError, match=key):
+        kmv_distinct(df, key, "v")
+
+
 def test_kmv_from_array_drops_null_elements(spark):
     """ADVICE r5: NULL is not a set element — kmv_from_array must match the
     DuckDB twin's list_distinct behavior (which removes NULLs) instead of

@@ -52,8 +52,9 @@ def test_joint_mc_tracks_theory(spark):
 # ---------------------------------------------------------------------------
 
 import glob
+import os
 
-import numpy as np
+import pytest
 
 from set_sketch_paper_spark.operators.mc_bench import (
     GHLL_CSV_CARDINALITIES,
@@ -61,6 +62,13 @@ from set_sketch_paper_spark.operators.mc_bench import (
 )
 
 _REF_DATA = "/root/reference/data"
+
+
+def _skip_without_reference():
+    """The golden CSVs are the reference checkout's own data files; they are
+    not vendored, so the parity half runs only where that checkout exists."""
+    if not os.path.isdir(_REF_DATA):
+        pytest.skip(f"golden CSV parity needs {_REF_DATA} (absent)")
 
 
 def _load_ghll_m256_golden():
@@ -97,15 +105,23 @@ def _load_minhash_m4096_golden():
 
 
 def test_cardinality_mc_matches_reference_csv(spark):
-    """Empirical rel-RMSE at every query grid point within a 5-sigma-ish
-    multiplicative band of the reference's 10k-example golden value (our
-    n=100 -> RMSE-of-RMSE ~ 7-10% with the estimator's heavy-ish error
-    kurtosis; band [0.65, 1.55])."""
-    golden = _load_ghll_m256_golden()
+    """Empirical rel-RMSE at every query grid point: within the closed-form
+    theory band wherever the estimator is in its asymptotic regime, and
+    within a 5-sigma-ish multiplicative band of the reference's 10k-example
+    golden value (our n=100 -> RMSE-of-RMSE ~ 7-10% with the estimator's
+    heavy-ish error kurtosis; band [0.65, 1.55])."""
+    m, base = 256, 2.0
+    theory = math.sqrt(((base + 1) / (base - 1) * math.log(base) - 1) / m)
     rows = cardinality_error_mc(
-        spark, cardinalities=GHLL_CSV_CARDINALITIES, num_examples=100
+        spark, cardinalities=GHLL_CSV_CARDINALITIES, num_examples=100, m=m, base=base
     ).collect()
     assert len(rows) == len(GHLL_CSV_CARDINALITIES) >= 10
+    for r in rows:
+        if r["cardinality"] >= 1000:
+            assert 0.4 * theory < r["rel_rmse"] < 1.5 * theory, (
+                r["cardinality"], r["rel_rmse"], theory)
+    _skip_without_reference()
+    golden = _load_ghll_m256_golden()
     for r in rows:
         g = golden[r["cardinality"]]
         ratio = r["rel_rmse"] / g
@@ -114,15 +130,21 @@ def test_cardinality_mc_matches_reference_csv(spark):
 
 def test_joint_mc_matches_reference_csv(spark):
     """Empirical Jaccard RMSE at every (inter, d1, d2) query grid tuple
-    (MinHash m=4096, ORIGINAL estimator) within a multiplicative band of the
-    reference's 1k-example golden value, plus the sqrt(J(1-J)/m) theory
-    check where J is not extreme."""
-    golden = _load_minhash_m4096_golden()
+    (MinHash m=4096, ORIGINAL estimator): the sqrt(J(1-J)/m) theory check
+    where J is not extreme, and within a multiplicative band of the
+    reference's 1k-example golden value."""
     m = 4096
     rows = joint_error_mc(
         spark, tuples=MINHASH_CSV_TUPLES, num_examples=60, m=m
     ).collect()
     assert len(rows) == len(MINHASH_CSV_TUPLES) >= 10
+    for r in rows:
+        j = r["true_jaccard"]
+        if 0.05 <= j <= 0.95:
+            th = math.sqrt(j * (1 - j) / m)
+            assert 0.5 * th < r["rmse"] < 2.0 * th, (r["inter"], r["rmse"], th)
+    _skip_without_reference()
+    golden = _load_minhash_m4096_golden()
     for r in rows:
         key = (r["inter"], r["d1"], r["d2"])
         g = golden[key]
@@ -130,10 +152,6 @@ def test_joint_mc_matches_reference_csv(spark):
         # J=0.001 rows see ~1-2 equal registers: RMSE-of-RMSE widens to
         # ~1/sqrt(2*n_eq*examples) -> keep one band across decades
         assert 0.55 < ratio < 1.8, (key, r["rmse"], g)
-        j = r["true_jaccard"]
-        if 0.05 <= j <= 0.95:
-            th = math.sqrt(j * (1 - j) / m)
-            assert 0.5 * th < r["rmse"] < 2.0 * th, (key, r["rmse"], th)
 
 
 def test_kmv_mc_tracks_theory(spark):
