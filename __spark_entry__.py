@@ -497,13 +497,19 @@ def _q_incremental_near_dup(spark, sf_dir):
     )
 
 
-def _q_lsh_candidates(spark, sf_dir):
+def _lsh_doc_candidates(spark, sf_dir):
+    """(docs with a ``content`` column, MinHash-LSH candidate pairs): the
+    preamble every candidate-pair sketch query shares."""
     from set_sketch_paper_spark.operators import lsh as lsh_ops
     from set_sketch_paper_spark.operators.signatures import with_minhash_signature
 
     docs = _docs(spark, sf_dir).withColumnRenamed("text", "content")
-    signed = with_minhash_signature(docs, DOC_PCFG).select("doc_id", "sig", "bands")
-    return lsh_ops.candidate_pairs(signed, DOC_PCFG.lsh, id_col="doc_id")
+    signed = with_minhash_signature(docs, DOC_PCFG).select("doc_id", "bands")
+    return docs, lsh_ops.candidate_pairs(signed, DOC_PCFG.lsh, id_col="doc_id")
+
+
+def _q_lsh_candidates(spark, sf_dir):
+    return _lsh_doc_candidates(spark, sf_dir)[1]
 
 
 def _q_dup_clusters_minhash(spark, sf_dir):
@@ -613,26 +619,16 @@ def _q_ghll_joint_pairs(spark, sf_dir):
     LSH candidates -> GHLL register sketches -> vectorized 'new' joint
     estimates per pair.  Rows-only (pseudo-random register state)."""
     from set_sketch_paper_spark.functions.udfs import make_register_pair_estimator_udf
-    from set_sketch_paper_spark.operators import lsh as lsh_ops
-    from set_sketch_paper_spark.operators.signatures import (
-        with_minhash_signature,
-        with_register_sketch,
-    )
+    from set_sketch_paper_spark.operators.lsh import pair_sides
+    from set_sketch_paper_spark.operators.signatures import with_register_sketch
 
     cfg = GHLLConfig(num_registers=256, base=2.0, q=62)
-    docs = _docs(spark, sf_dir).withColumnRenamed("text", "content")
-    signed = with_minhash_signature(docs, DOC_PCFG).select("doc_id", "content", "bands")
-    cands = lsh_ops.candidate_pairs(signed, DOC_PCFG.lsh, id_col="doc_id")
-    regs = with_register_sketch(docs, cfg, DOC_PCFG, out="registers").select(
-        F.col("doc_id").alias("_rid"), "registers"
-    )
+    docs, cands = _lsh_doc_candidates(spark, sf_dir)
+    regs = with_register_sketch(docs, cfg, DOC_PCFG, out="registers")
     est_udf = make_register_pair_estimator_udf(cfg, method="new")
-    joined = (
-        cands.join(regs.withColumnRenamed("_rid", "id1").withColumnRenamed("registers", "r1"), "id1")
-        .join(regs.withColumnRenamed("_rid", "id2").withColumnRenamed("registers", "r2"), "id2")
-    )
+    joined = pair_sides(cands, regs, "doc_id", ["registers"])
     return joined.select(
-        "id1", "id2", est_udf(F.col("r1"), F.col("r2")).alias("est")
+        "id1", "id2", est_udf(F.col("registers1"), F.col("registers2")).alias("est")
     ).select(
         "id1",
         "id2",
@@ -647,26 +643,16 @@ def _q_ghll_jaccard_bounds(spark, sf_dir):
     fraction (sketch.hpp:701-719) over LSH candidate pairs — the paper's
     collision-based bound estimators end-to-end.  Rows-only."""
     from set_sketch_paper_spark.functions.udfs import make_register_bounds_udf
-    from set_sketch_paper_spark.operators import lsh as lsh_ops
-    from set_sketch_paper_spark.operators.signatures import (
-        with_minhash_signature,
-        with_register_sketch,
-    )
+    from set_sketch_paper_spark.operators.lsh import pair_sides
+    from set_sketch_paper_spark.operators.signatures import with_register_sketch
 
     cfg = GHLLConfig(num_registers=256, base=2.0, q=62)
-    docs = _docs(spark, sf_dir).withColumnRenamed("text", "content")
-    signed = with_minhash_signature(docs, DOC_PCFG).select("doc_id", "content", "bands")
-    cands = lsh_ops.candidate_pairs(signed, DOC_PCFG.lsh, id_col="doc_id")
-    regs = with_register_sketch(docs, cfg, DOC_PCFG, out="registers").select(
-        F.col("doc_id").alias("_rid"), "registers"
-    )
+    docs, cands = _lsh_doc_candidates(spark, sf_dir)
+    regs = with_register_sketch(docs, cfg, DOC_PCFG, out="registers")
     bounds = make_register_bounds_udf(cfg)
-    joined = (
-        cands.join(regs.withColumnRenamed("_rid", "id1").withColumnRenamed("registers", "r1"), "id1")
-        .join(regs.withColumnRenamed("_rid", "id2").withColumnRenamed("registers", "r2"), "id2")
-    )
+    joined = pair_sides(cands, regs, "doc_id", ["registers"])
     return joined.select(
-        "id1", "id2", bounds(F.col("r1"), F.col("r2")).alias("b")
+        "id1", "id2", bounds(F.col("registers1"), F.col("registers2")).alias("b")
     ).select(
         "id1", "id2",
         F.col("b.jaccard_lower").alias("jaccard_lower"),
@@ -681,26 +667,16 @@ def _q_ghll_joint_refine(spark, sf_dir):
     484-522).  ``passed`` is the >= threshold decision; ``solved`` marks the
     pairs that actually paid for a solver call.  Rows-only."""
     from set_sketch_paper_spark.functions.udfs import make_register_pair_estimator_udf
-    from set_sketch_paper_spark.operators import lsh as lsh_ops
-    from set_sketch_paper_spark.operators.signatures import (
-        with_minhash_signature,
-        with_register_sketch,
-    )
+    from set_sketch_paper_spark.operators.lsh import pair_sides
+    from set_sketch_paper_spark.operators.signatures import with_register_sketch
 
     cfg = GHLLConfig(num_registers=256, base=2.0, q=62)
-    docs = _docs(spark, sf_dir).withColumnRenamed("text", "content")
-    signed = with_minhash_signature(docs, DOC_PCFG).select("doc_id", "content", "bands")
-    cands = lsh_ops.candidate_pairs(signed, DOC_PCFG.lsh, id_col="doc_id")
-    regs = with_register_sketch(docs, cfg, DOC_PCFG, out="registers").select(
-        F.col("doc_id").alias("_rid"), "registers"
-    )
+    docs, cands = _lsh_doc_candidates(spark, sf_dir)
+    regs = with_register_sketch(docs, cfg, DOC_PCFG, out="registers")
     est_udf = make_register_pair_estimator_udf(cfg, method="new", threshold=0.5)
-    joined = (
-        cands.join(regs.withColumnRenamed("_rid", "id1").withColumnRenamed("registers", "r1"), "id1")
-        .join(regs.withColumnRenamed("_rid", "id2").withColumnRenamed("registers", "r2"), "id2")
-    )
+    joined = pair_sides(cands, regs, "doc_id", ["registers"])
     return joined.select(
-        "id1", "id2", est_udf(F.col("r1"), F.col("r2")).alias("e")
+        "id1", "id2", est_udf(F.col("registers1"), F.col("registers2")).alias("e")
     ).select(
         "id1",
         "id2",
@@ -899,22 +875,16 @@ def _q_hmh_joint_pairs(spark, sf_dir):
         make_hyperminhash_pair_estimator_udf,
         make_hyperminhash_sketch_udf,
     )
-    from set_sketch_paper_spark.operators import lsh as lsh_ops
-    from set_sketch_paper_spark.operators.signatures import with_minhash_signature
+    from set_sketch_paper_spark.operators.lsh import pair_sides
 
     cfg = HyperMinHashConfig(bucketbits=8, bucketsize=6, subbucketsize=10)
-    docs = _docs(spark, sf_dir).withColumnRenamed("text", "content")
-    signed = with_minhash_signature(docs, DOC_PCFG).select("doc_id", "content", "bands")
-    cands = lsh_ops.candidate_pairs(signed, DOC_PCFG.lsh, id_col="doc_id")
+    docs, cands = _lsh_doc_candidates(spark, sf_dir)
     sk_udf = make_hyperminhash_sketch_udf(cfg, DOC_PCFG.shingle)
-    regs = docs.select(F.col("doc_id").alias("_rid"), sk_udf(F.col("content")).alias("registers"))
+    regs = docs.select("doc_id", sk_udf(F.col("content")).alias("registers"))
     est_udf = make_hyperminhash_pair_estimator_udf(cfg, method="original")
-    joined = (
-        cands.join(regs.withColumnRenamed("_rid", "id1").withColumnRenamed("registers", "r1"), "id1")
-        .join(regs.withColumnRenamed("_rid", "id2").withColumnRenamed("registers", "r2"), "id2")
-    )
+    joined = pair_sides(cands, regs, "doc_id", ["registers"])
     return joined.select(
-        "id1", "id2", est_udf(F.col("r1"), F.col("r2")).alias("est")
+        "id1", "id2", est_udf(F.col("registers1"), F.col("registers2")).alias("est")
     ).select(
         "id1", "id2",
         F.col("est.est_jaccard").alias("est_jaccard"),
@@ -1056,22 +1026,15 @@ def _q_kmv_jaccard_pairs(spark, sf_dir):
     the two id equi-joins attaching them to the pair set."""
     from set_sketch_paper_spark.operators.dedup import ngram_jaccard_pairs
     from set_sketch_paper_spark.operators.kmv import kmv_jaccard_cols
+    from set_sketch_paper_spark.operators.lsh import pair_sides
 
     docs = _docs(spark, sf_dir)
     pairs = ngram_jaccard_pairs(
         docs, k=3, threshold_num=1, threshold_den=2,
         id_col="doc_id", text_col="text",
     ).select("id1", "id2", "jaccard_q")
-    sk = _doc_gram_sketches(spark, sf_dir, _KMV_DOC_K).select("doc_id", "ks")
-    j = (
-        pairs.join(
-            sk.withColumnRenamed("doc_id", "id1").withColumnRenamed("ks", "ks1"),
-            "id1",
-        ).join(
-            sk.withColumnRenamed("doc_id", "id2").withColumnRenamed("ks", "ks2"),
-            "id2",
-        )
-    )
+    sk = _doc_gram_sketches(spark, sf_dir, _KMV_DOC_K)
+    j = pair_sides(pairs, sk, "doc_id", ["ks"])
     m, u, jq = kmv_jaccard_cols(F.col("ks1"), F.col("ks2"), _KMV_DOC_K)
     return j.select(
         "id1", "id2", "jaccard_q",
@@ -1086,22 +1049,15 @@ def _q_kmv_setops_pairs(spark, sf_dir):
     state the SQL oracle recomputes (operators/kmv.py::kmv_setops_cols)."""
     from set_sketch_paper_spark.operators.dedup import ngram_jaccard_pairs
     from set_sketch_paper_spark.operators.kmv import kmv_setops_cols
+    from set_sketch_paper_spark.operators.lsh import pair_sides
 
     docs = _docs(spark, sf_dir)
     pairs = ngram_jaccard_pairs(
         docs, k=3, threshold_num=1, threshold_den=2,
         id_col="doc_id", text_col="text",
     ).select("id1", "id2", "inter_count", "union_count")
-    sk = _doc_gram_sketches(spark, sf_dir, _KMV_DOC_K).select("doc_id", "ks")
-    j = (
-        pairs.join(
-            sk.withColumnRenamed("doc_id", "id1").withColumnRenamed("ks", "ks1"),
-            "id1",
-        ).join(
-            sk.withColumnRenamed("doc_id", "id2").withColumnRenamed("ks", "ks2"),
-            "id2",
-        )
-    )
+    sk = _doc_gram_sketches(spark, sf_dir, _KMV_DOC_K)
+    j = pair_sides(pairs, sk, "doc_id", ["ks"])
     uq, iq, aq = kmv_setops_cols(F.col("ks1"), F.col("ks2"), _KMV_DOC_K)
     return j.select(
         "id1", "id2", "inter_count", "union_count",

@@ -7,10 +7,12 @@ and sketching them is pure waste — group by sha256 first, push only the
 representatives through LSH, and re-attach members afterwards
 (SURVEY.md §7.1 step 3).
 
-Every exact self-join in this module goes through ``shared_key_pair_counts``
-— the capped bucket-expand shape — because an uncapped equi-self-join on a
-content-derived key (gram, fingerprint, simhash block) is quadratic in the
-hottest key's frequency, which at 100 TB is a stop-gram in ~every document.
+Every bucketed self-join in this module (LSH bands, fingerprints, simhash
+blocks, LCS candidate grams) expands its pairs through ``lsh.bucket_pairs``
+— the capped i<j bucket expansion — because an uncapped equi-self-join on a
+content-derived key is quadratic in the hottest key's frequency, which at
+100 TB is a stop-gram in ~every document.  (ngram_jaccard_pairs' small
+prefix buckets use their own, measured flat expansion.)
 """
 
 from __future__ import annotations
@@ -99,40 +101,13 @@ def near_dup_against_snapshot(
     # signature store would slot in (docstring note above).
     signed = new_signed.unionByName(old_signed).localCheckpoint(eager=True)
 
-    nb = lsh_ops.explode_bands(signed.filter(F.col("_nw")).drop("_nw"), id_col).withColumn(
-        "_nw", F.lit(True)
+    # the new/old flag rides the band explode of the ONE unioned frame
+    # (checkpointed, so the plain generator re-runs no UDF)
+    members = signed.select(
+        F.col(id_col).alias("_id"), "_nw", F.explode("bands").alias("band_hash")
     )
-    ob = lsh_ops.explode_bands(signed.filter(~F.col("_nw")).drop("_nw"), id_col).withColumn(
-        "_nw", F.lit(False)
-    )
-    buckets = (
-        nb.unionByName(ob)
-        .groupBy("band_hash")
-        .agg(
-            F.collect_list(
-                F.struct(F.col("_id").alias("id"), F.col("_nw").alias("nw"))
-            ).alias("xs")
-        )
-    )
-    ok = buckets.filter(
-        (F.size("xs") >= 2)
-        & (F.size("xs") <= pcfg.lsh.band_cap)
-        & F.exists("xs", lambda x: x["nw"])
-    )
-    pair_expr = F.explode(
-        F.expr(
-            "flatten(transform(xs, (x, i) -> "
-            "filter(transform(slice(xs, i + 2, size(xs)), y -> struct("
-            "least(x.id, y.id) as id1, greatest(x.id, y.id) as id2, "
-            "(x.nw or y.nw) as has_new)), p -> p.has_new)))"
-        )
-    ).alias("p")
-    pairs = (
-        ok.select(pair_expr)
-        .select("p.id1", "p.id2")
-        .filter(F.col("id1") != F.col("id2"))
-        .dropDuplicates(["id1", "id2"])
-    )
+    pairs, _ = lsh_ops.bucket_pairs(members, "band_hash", pcfg.lsh.band_cap, need="_nw")
+    pairs = pairs.dropDuplicates(["id1", "id2"])
     est_udf = make_minhash_pair_estimator_udf(pcfg.minhash, estimator)
     return lsh_ops.verified_pairs(
         pairs, signed.drop("_nw"), est_udf,
@@ -176,32 +151,17 @@ def shared_key_pair_counts(
     stop-gram/boilerplate fingerprint at corpus scale is quadratic death.
     Instead, ONE shuffle groups ids per key (collect_list), hot keys
     (f > key_cap) are dropped and REPORTED (same skew guard as the LSH
-    band_cap, operators/lsh.py:41-80; callers can route hot keys to a
+    band_cap, operators/lsh.py::bucket_pairs; callers can route hot keys to a
     boilerplate path), and the capped s(s-1)/2 pair expansion is a single
     codegen'd flatten/transform (no s^2 array copies).
     """
-    buckets = exploded.groupBy("g").agg(F.collect_list("_id").alias("ids"))
-    sized = buckets.withColumn("bucket_size", F.size("ids"))
-    ok = sized.filter((F.col("bucket_size") >= 2) & (F.col("bucket_size") <= key_cap))
-    pair_expr = F.explode(
-        F.expr(
-            "flatten(transform(ids, (x, i) -> "
-            "transform(slice(ids, i + 2, size(ids)), y -> "
-            "struct(least(x, y) as id1, greatest(x, y) as id2))))"
-        )
-    ).alias("p")
+    pairs, skipped = lsh_ops.bucket_pairs(exploded, "g", key_cap)
     inter = (
-        ok.select(pair_expr)
-        .select("p.id1", "p.id2")
-        .filter(F.col("id1") != F.col("id2"))
-        .groupBy("id1", "id2")
+        pairs.groupBy("id1", "id2")
         .agg(F.count(F.lit(1)).alias("inter_count"))
         .filter(F.col("inter_count") >= min_shared)
     )
     if with_skipped:
-        skipped = sized.filter(F.col("bucket_size") > key_cap).select(
-            "g", "bucket_size"
-        )
         return inter, skipped
     return inter
 
@@ -372,7 +332,7 @@ def ngram_jaccard_pairs(
     # lambda chain measured 2x slower end-to-end at sf1.0-scale (expansion
     # alone 3.0-6.4s vs 1.2-1.5s; candidates 10.6s vs 5s median) — the
     # same non-codegen-Generate lesson as the gram construction above.
-    # (lsh._expand_buckets measured the OPPOSITE for its up-to-band_cap=500
+    # (lsh.bucket_pairs measured the OPPOSITE for its up-to-band_cap=500
     # arrays: shape choice is per-site, by measurement.)
     #
     # The counting aggregate carries ONLY the 16-byte (id1, id2) key —
@@ -417,23 +377,12 @@ def ngram_jaccard_pairs(
     # exact prefix-count filter then runs on the qlo survivors before the
     # exact intersection
     out = (
-        cand.join(
-            per_doc.select(
-                F.col("_id").alias("id1"), F.col("n").alias("n1"), F.col("garr").alias("gs1")
-            ),
-            "id1",
-        )
-        .join(
-            per_doc.select(
-                F.col("_id").alias("id2"), F.col("n").alias("n2"), F.col("garr").alias("gs2")
-            ),
-            "id2",
-        )
+        lsh_ops.pair_sides(cand, per_doc, "_id", ["n", "garr"])
         .filter(
             F.col("_shared_pref")
             >= F.least(F.lit(prefix_q), _tau(F.col("n1")), _tau(F.col("n2")))
         )
-        .withColumn("inter_count", F.size(F.array_intersect("gs1", "gs2")))
+        .withColumn("inter_count", F.size(F.array_intersect("garr1", "garr2")))
         .filter(F.col("inter_count") >= min_shared)
         .withColumn("union_count", F.col("n1") + F.col("n2") - F.col("inter_count"))
         .filter(
@@ -531,29 +480,16 @@ def simhash_near_dup_pairs(
             )
         ).alias("block_idx", "block_val"),
     )
-    buckets = blocks.groupBy("block_idx", "block_val").agg(
-        F.collect_list(F.struct(F.col("_id").alias("id"), F.col("simhash").alias("sh"))).alias("xs")
+    pairs, _ = lsh_ops.bucket_pairs(
+        blocks, ["block_idx", "block_val"], block_cap, payload="simhash"
     )
-    ok = buckets.filter((F.size("xs") >= 2) & (F.size("xs") <= block_cap))
-    pair_expr = F.explode(
-        F.expr(
-            "flatten(transform(xs, (x, i) -> "
-            "transform(slice(xs, i + 2, size(xs)), y -> struct("
-            "least(x.id, y.id) as id1, greatest(x.id, y.id) as id2, "
-            "if(x.id < y.id, x.sh, y.sh) as sh1, "
-            "if(x.id < y.id, y.sh, x.sh) as sh2))))"
-        )
-    ).alias("p")
-    pairs = (
-        ok.select(pair_expr)
-        .select("p.id1", "p.id2", "p.sh1", "p.sh2")
-        .filter(F.col("id1") != F.col("id2"))
-        .dropDuplicates(["id1", "id2"])
-        .withColumn("hamming", F.bit_count(F.col("sh1").bitwiseXOR(F.col("sh2"))))
+    return (
+        pairs.dropDuplicates(["id1", "id2"])
+        .withColumn("hamming", F.bit_count(F.col("p1").bitwiseXOR(F.col("p2"))))
         .filter(F.col("hamming") <= hamming_threshold)
         .select("id1", "id2", "hamming")
     )
-    return pairs
+
 
 def lcs_substring_pairs(
     df: DataFrame,
@@ -702,8 +638,7 @@ def lcs_substring_pairs(
     # the kernel is marked nondeterministic so the >= min_len filter is not
     # pushed below/duplicated around the Python evaluation (guide §4.4).
     paired = (
-        cand.join(gs.select(F.col("_id").alias("id1"), F.col("gs").alias("gs1")), "id1")
-        .join(gs.select(F.col("_id").alias("id2"), F.col("gs").alias("gs2")), "id2")
+        lsh_ops.pair_sides(cand, gs, "_id", ["gs"])
         # both keys are data-derived zeros (least(size(x), 0) == 0 because
         # size >= 0, which the optimizer cannot prove): a literal on either
         # side would be constant-folded, the condition pushed down as a

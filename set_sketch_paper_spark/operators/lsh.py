@@ -1,4 +1,6 @@
-"""LSH banding and candidate-pair generation.
+"""LSH banding and candidate-pair generation, plus the pair layer every
+bucketed pair operator shares: ``bucket_pairs`` (capped i<j expansion per
+bucket) and ``pair_sides`` (per-id columns joined onto both pair sides).
 
 Scale design (SURVEY.md §4, north rule):
 - band explosion is a narrow op (posexplode of the per-row band array);
@@ -46,23 +48,89 @@ def explode_bands(df: DataFrame, id_col: str = "file_id", bands_col: str = "band
     ).filter(F.col("band_hash").isNotNull())
 
 
-_PAIR_EXPR = (
-    "flatten(transform(ids, (x, i) -> "
-    "transform(slice(ids, i + 2, size(ids)), y -> "
-    "struct(least(x, y) as id1, greatest(x, y) as id2))))"
-)
+def bucket_pairs(members: DataFrame, keys, cap, *, payload=None, need=None):
+    """(keys..., _id[, payload][, need]) member rows -> (pairs, skipped).
 
+    The capped i<j bucket expansion the pair operators share (LSH bands,
+    fingerprint and gram keys, SimHash blocks): ONE groupBy(keys) collects
+    each bucket's members, and buckets of 2..``cap`` members (``cap=None``:
+    uncapped) expand to their s(s-1)/2 pairs in one codegen'd expression —
+    a double explode would instead materialize s rows each carrying the
+    full array (s^2 array copies per bucket, measured 4x slower).
 
-def _expand_buckets(buckets: DataFrame) -> DataFrame:
-    """(.., ids array) -> (id1 < id2) rows: the s(s-1)/2 i<j pairs per bucket
-    in ONE codegen'd expression — a double explode would instead materialize
-    s rows each carrying the full ids array (s^2 array copies per bucket,
-    measured 4x slower)."""
-    return (
-        buckets.select(F.explode(F.expr(_PAIR_EXPR)).alias("p"))
-        .select("p.id1", "p.id2")
+    ``pairs`` is (id1 < id2[, p1, p2]) once per SHARED bucket — no dedup,
+    so a pair in k buckets appears k times (shared_key_pair_counts counts
+    them).  ``payload`` carries one member column along, oriented with the
+    ids (p1 belongs to id1).  ``need`` names a boolean member column: buckets
+    with no flagged member are skipped before expansion and pairs with no
+    flagged side are filtered inside the expression, never materialized.
+    ``skipped`` is (keys..., bucket_size) for the buckets over the cap — the
+    skew report (a boilerplate bucket of size s would emit s^2/2 pairs) —
+    or None when uncapped.
+    """
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    clash = sorted({"_id", "ids", "bucket_size"} & set(keys))
+    if clash:
+        raise ValueError(
+            f"bucket_pairs key column(s) {clash} clash with its internal "
+            "member/bucket columns; rename them first"
+        )
+    extra = [F.col(c).alias(f) for f, c in (("p", payload), ("nw", need)) if c is not None]
+    if extra:
+        elem, x, y = F.struct(F.col("_id").alias("id"), *extra), "x.id", "y.id"
+    else:
+        elem, x, y = F.col("_id"), "x", "y"
+    sized = (
+        members.groupBy(*keys)
+        .agg(F.collect_list(elem).alias("ids"))
+        .withColumn("bucket_size", F.size("ids"))
+    )
+    ok = F.col("bucket_size") >= 2
+    if cap is not None:
+        ok = ok & (F.col("bucket_size") <= cap)
+    others = "slice(ids, i + 2, size(ids))"
+    out = f"least({x}, {y}) as id1, greatest({x}, {y}) as id2"
+    cols = ["p.id1", "p.id2"]
+    if need is not None:
+        ok = ok & F.exists("ids", lambda m: m["nw"])
+        others = f"filter({others}, y -> x.nw or y.nw)"
+    if payload is not None:
+        out += f", if({x} < {y}, x.p, y.p) as p1, if({x} < {y}, y.p, x.p) as p2"
+        cols += ["p.p1", "p.p2"]
+    expr = f"flatten(transform(ids, (x, i) -> transform({others}, y -> struct({out}))))"
+    pairs = (
+        sized.filter(ok)
+        .select(F.explode(F.expr(expr)).alias("p"))
+        .select(*cols)
         .filter(F.col("id1") != F.col("id2"))
     )
+    if cap is None:
+        return pairs, None
+    return pairs, sized.filter(F.col("bucket_size") > cap).select(*keys, "bucket_size")
+
+
+def pair_sides(pairs: DataFrame, table: DataFrame, id_col: str, cols) -> DataFrame:
+    """Attach per-id ``cols`` of ``table`` to both sides of (id1, id2) pairs
+    as <col>1 / <col>2: one id equi-join per side, the table projected to
+    (id, cols) first so the shuffle never carries anything else.  At cluster
+    scale both sides are pre-partitioned by id — the co-located join of the
+    design (AQE skew-join handling stays on)."""
+    taken = set(pairs.columns)
+    for c in cols:
+        for side in ("1", "2"):
+            if c + side in taken:
+                raise ValueError(
+                    f"pair_sides column {c!r} would be attached as {c + side!r}, "
+                    "which the pairs frame already has; rename it first"
+                )
+    for side in ("1", "2"):
+        pairs = pairs.join(
+            table.select(
+                F.col(id_col).alias("id" + side), *[F.col(c).alias(c + side) for c in cols]
+            ),
+            "id" + side,
+        )
+    return pairs
 
 
 def candidate_pairs(
@@ -89,33 +157,20 @@ def candidate_pairs(
     oversized-bucket summary (band_hash, bucket_size).
     """
     exploded = explode_bands(df, id_col, bands_col)
-    buckets = exploded.groupBy("band_hash").agg(
-        F.collect_list("_id").alias("ids")
-    )
-    sized = buckets.withColumn("bucket_size", F.size("ids"))
-    ok = sized.filter((F.col("bucket_size") >= 2) & (F.col("bucket_size") <= lsh.band_cap))
-    pairs = _expand_buckets(ok)
-    hot = sized.filter(F.col("bucket_size") > lsh.band_cap)
+    pairs, hot = bucket_pairs(exploded, "band_hash", lsh.band_cap)
     if hot_mode == "salt":
-        # re-shuffle ONLY the hot-band membership rows (rare by definition)
+        # re-bucket ONLY the hot-band membership rows (rare by definition)
         # with a deterministic per-id salt; sub-buckets are ~cap-sized w.h.p.
         n_sub = F.ceil(F.col("bucket_size") / F.lit(lsh.band_cap)).cast("long")
-        hot_rows = hot.select(
-            "band_hash", n_sub.alias("_nsub"), F.explode("ids").alias("_id")
-        )
-        salted = hot_rows.withColumn("_salt", F.pmod(F.xxhash64("_id"), F.col("_nsub")))
-        hot_buckets = (
-            salted.groupBy("band_hash", "_salt")
-            .agg(F.collect_list("_id").alias("ids"))
-            .filter(F.size("ids") >= 2)
-        )
-        pairs = pairs.union(_expand_buckets(hot_buckets))
+        salted = exploded.join(hot.select("band_hash", n_sub.alias("_nsub")), "band_hash")
+        salted = salted.withColumn("_salt", F.pmod(F.xxhash64("_id"), F.col("_nsub")))
+        sub_pairs, _ = bucket_pairs(salted, ["band_hash", "_salt"], None)
+        pairs = pairs.union(sub_pairs)
     elif hot_mode != "drop":
         raise ValueError(f"unknown hot_mode {hot_mode!r} (expected 'drop' or 'salt')")
     pairs = pairs.dropDuplicates(["id1", "id2"])
     if with_skipped:
-        skipped = hot.select("band_hash", "bucket_size")
-        return pairs, skipped
+        return pairs, hot
     return pairs
 
 
@@ -141,21 +196,8 @@ def verified_pairs(
     signature table is projected to (id, sig, n) before joining (column
     pruning: never carry content or bands here).
     """
-    sig = signatures.select(
-        F.col(id_col).alias("_sid"), F.col(sig_col).alias("_sig"), F.col(n_col).alias("_n")
-    )
-    joined = (
-        pairs.join(
-            sig.withColumnRenamed("_sid", "id1").withColumnRenamed("_sig", "sig1")
-            .withColumnRenamed("_n", "n1"),
-            "id1",
-        )
-        .join(
-            sig.withColumnRenamed("_sid", "id2").withColumnRenamed("_sig", "sig2")
-            .withColumnRenamed("_n", "n2"),
-            "id2",
-        )
-    )
+    sig = signatures.select(id_col, F.col(sig_col).alias("sig"), F.col(n_col).alias("n"))
+    joined = pair_sides(pairs, sig, id_col, ["sig", "n"])
     est = joined.withColumn(
         "est", estimator_udf(F.col("sig1"), F.col("sig2"), F.col("n1"), F.col("n2"))
     )

@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import ArrayType, IntegerType, LongType
 
+from ..operators.lsh import pair_sides
+
 _QUANT = 1000
 
 
@@ -109,7 +111,7 @@ def _coded(corpus: DataFrame, id_col: str, vec_col: str, n_bits: int,
 
     Candidate generation self-joins slim (ids only — the pair-dedup shuffle
     never carries the quantized vectors); scoring joins vecs back by id,
-    exactly the LSH verify shape (operators/lsh.py::verified_pairs).  The
+    exactly the LSH verify shape (operators/lsh.py::pair_sides).  The
     bucket-size side table has at most n_tables * 2^n_bits rows, so the
     hot-bucket filter is a broadcast join — no extra big-side shuffle.
     """
@@ -141,17 +143,6 @@ def _coded(corpus: DataFrame, id_col: str, vec_col: str, n_bits: int,
     )
     vecs = coded.select("_id", "qv", "norm")
     return slim_ok, vecs
-
-
-def _join_vectors(pairs: DataFrame, vecs: DataFrame, left: str, right: str) -> DataFrame:
-    """Attach (qv, norm) for both pair sides by id."""
-    v1 = vecs.select(
-        F.col("_id").alias(left), F.col("qv").alias("qv"), F.col("norm").alias("qnorm")
-    )
-    v2 = vecs.select(
-        F.col("_id").alias(right), F.col("qv").alias("cv"), F.col("norm").alias("cnorm")
-    )
-    return pairs.join(v1, left).join(v2, right)
 
 
 def _bucket_topk_kernel(k: int, bucket_cap: int):
@@ -535,9 +526,9 @@ def cosine_near_dup_pairs_ann(
         .dropDuplicates(["id1", "id2"])
     )
     return (
-        _join_vectors(cand, vecs, "id1", "id2")
-        .withColumn("dot", _dot(F.col("qv"), F.col("cv")))
-        .withColumn("cos_q", _cos_q(F.col("dot"), F.col("qnorm"), F.col("cnorm")))
+        pair_sides(cand, vecs, "_id", ["qv", "norm"])
+        .withColumn("dot", _dot(F.col("qv1"), F.col("qv2")))
+        .withColumn("cos_q", _cos_q(F.col("dot"), F.col("norm1"), F.col("norm2")))
         .filter(F.col("cos_q") >= threshold_q)
         .select("id1", "id2", "cos_q")
     )

@@ -175,3 +175,102 @@ def test_ngram_qlo_prefilter_edge_inputs(spark):
     )
     rows = {(r["id1"], r["id2"]): r["jaccard_q"] for r in ngram_jaccard_pairs(tiny).collect()}
     assert rows == {(1, 2): 1_000_000}
+
+
+CAP = 6
+
+
+@pytest.fixture(scope="module")
+def membership(spark):
+    """Random (g, _id, pl, fl) membership table plus two planted buckets at
+    the cap boundary, on ids no random row uses: key 900 holds exactly CAP
+    members (ids 100..), key 901 CAP + 1 (ids 200..).
+    ``pl`` is a per-membership payload (g * 1000 + _id, so its id is
+    recoverable), ``fl`` a boolean member flag."""
+    import numpy as np
+    import pandas as pd
+
+    rs = np.random.RandomState(7)
+    rows = {(int(g), int(i)) for g, i in zip(rs.randint(0, 60, 240), rs.randint(0, 24, 240))}
+    rows |= {(900, 100 + i) for i in range(CAP)} | {(901, 200 + i) for i in range(CAP + 1)}
+    pdf = pd.DataFrame(sorted(rows), columns=["g", "_id"])
+    pdf["pl"] = pdf["g"] * 1000 + pdf["_id"]
+    pdf["fl"] = pdf["_id"] % 3 == 0
+    return pdf, spark.createDataFrame(pdf, "g long, _id long, pl long, fl boolean")
+
+
+def _brute_bucket_pairs(pdf, cap, payload=None, need=None):
+    """pandas twin: per-bucket i<j pairs (one row per shared bucket)."""
+    from collections import Counter
+
+    pairs, skipped = Counter(), []
+    for g, grp in pdf.groupby("g"):
+        if len(grp) > cap:
+            skipped.append((g, len(grp)))
+            continue
+        for a, b in itertools.combinations(grp.to_dict("records"), 2):
+            lo, hi = sorted((a, b), key=lambda r: r["_id"])
+            if need and not (lo[need] or hi[need]):
+                continue
+            pairs[(lo["_id"], hi["_id"]) + ((lo[payload], hi[payload]) if payload else ())] += 1
+    return pairs, sorted(skipped)
+
+
+@pytest.mark.parametrize(
+    "payload,need", [(None, None), ("pl", None), (None, "fl")], ids=["plain", "payload", "need"]
+)
+def test_bucket_pairs_matches_brute_force(membership, payload, need):
+    """bucket_pairs == its pandas twin, row multiplicity included, in the
+    three shapes its callers use: plain, with a payload, with a need flag."""
+    from collections import Counter
+
+    from set_sketch_paper_spark.operators.lsh import bucket_pairs
+
+    pdf, df = membership
+    pairs, skipped = bucket_pairs(df, "g", CAP, payload=payload, need=need)
+    got = Counter(tuple(r) for r in pairs.collect())
+    want, want_skipped = _brute_bucket_pairs(pdf, CAP, payload, need)
+    assert got == want
+    assert sorted(map(tuple, skipped.collect())) == want_skipped
+    # cap boundary: the size-CAP bucket expands, the size-(CAP+1) one is
+    # reported and emits nothing
+    assert (901, CAP + 1) in want_skipped and (900, CAP) not in want_skipped
+    ids = {k[:2] for k in got}
+    if need is None:
+        assert set(itertools.combinations(range(100, 100 + CAP), 2)) <= ids
+    assert not any(k[0] >= 200 for k in ids)
+    # per-bucket multiplicity: some pair shares >= 2 buckets and appears
+    # once per bucket (what shared_key_pair_counts counts)
+    assert max(Counter(k[:2] for k in got.elements()).values()) >= 2
+    if payload:  # p1 belongs to id1, p2 to id2
+        assert all(k[2] % 1000 == k[0] and k[3] % 1000 == k[1] for k in got)
+    if need:
+        flagged = set(pdf.loc[pdf["fl"], "_id"])
+        assert all(k[0] in flagged or k[1] in flagged for k in got)
+
+
+@pytest.mark.parametrize("key", ["_id", "ids", "bucket_size"])
+def test_bucket_pairs_rejects_internal_key_names(spark, key):
+    """A key named like one of bucket_pairs' internal member/bucket columns
+    is refused by name instead of silently regrouping or overwriting."""
+    from set_sketch_paper_spark.operators.lsh import bucket_pairs
+
+    df = spark.createDataFrame([(1, 2)], schema=f"{key} long, v long")
+    with pytest.raises(ValueError, match=key):
+        bucket_pairs(df, key, 10)
+
+
+@pytest.mark.parametrize(
+    "col,pair_cols",
+    [("id", "id1 long, id2 long"), ("x", "id1 long, id2 long, x1 long")],
+    ids=["join_key", "taken"],
+)
+def test_pair_sides_rejects_clashing_columns(spark, col, pair_cols):
+    """A side column whose <col>1/<col>2 name is a join key or already on
+    the pairs frame is refused by name, not left ambiguous."""
+    from set_sketch_paper_spark.operators.lsh import pair_sides
+
+    pairs = spark.createDataFrame([tuple(range(len(pair_cols.split(","))))], pair_cols)
+    table = spark.createDataFrame([(0, 5)], f"doc_id long, {col} long")
+    with pytest.raises(ValueError, match=repr(col)):
+        pair_sides(pairs, table, "doc_id", [col])

@@ -169,3 +169,22 @@ def test_calibrated_quality_filter_broadcasts_thresholds(spark):
     plan = _plan(entrymod.queries()["calibrated_quality_filter"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+# Exchange count of each pair path's plan, the same at sf0.001, 0.01 and
+# 0.1 (lsh.bucket_pairs expansion + lsh.pair_sides id joins).  A change
+# that adds a shuffle to a pair path has to move these numbers on purpose.
+PAIR_PATH_EXCHANGES = {
+    "lsh_candidates": 3,
+    "minhash_near_dup_pairs": 7,
+    "incremental_near_dup": 4,
+    "simhash_pairs": 3,
+    "winnow_substring_pairs": 3,
+    "lcs_substring_pairs": 12,
+}
+
+
+@pytest.mark.parametrize("name", sorted(PAIR_PATH_EXCHANGES))
+def test_pair_path_exchange_counts(spark, name):
+    plan = _plan(entrymod.queries()[name](spark, SF_DIR))
+    assert plan.count("Exchange") == PAIR_PATH_EXCHANGES[name], plan[:3000]
