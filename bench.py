@@ -19,7 +19,9 @@ throughput(4N) / (4 * throughput(N)).
 Kernel mode:
     python bench.py --kernels
 prints single-thread numpy insert throughput (ns/element) for each sketch
-at the reference's configs — directly comparable to the BASELINE.md table.
+at the reference's configs — directly comparable to the BASELINE.md table —
+plus ``udf_task_overhead_ms``, the Python-worker CPU of one identity
+mapInPandas task (the fixed cost of every Python UDF task).
 
 Headline set: the flagship near-dup pipeline + one representative query per
 operator family (sketching, LSH, register aggregation, exact dedup, ANN,
@@ -467,7 +469,57 @@ def run_kernels(n: int = 2_000_000, m: int = 4096, reps: int = 3) -> dict:
         "queries": per_elem_ns,
         "sf": "kernel",
         "n_elements": n,
+        "udf_task_overhead_ms": udf_task_overhead_ms(),
     }
+
+
+def _python_worker_cpu_s() -> float:
+    """CPU seconds used so far by this driver's pyspark daemons and their
+    workers, live or already reaped, read the way perfbench reads a process
+    tree."""
+    from perfbench.harness import descendants, tree_cpu_s
+
+    daemons = set()
+    for pid in descendants():
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                if b"pyspark.daemon" in f.read():
+                    daemons.add(pid)
+        except OSError:  # ended since the scan
+            pass
+    # workers are forked from the daemon and share its command line
+    forked = {c for d in daemons for c in descendants(d) if c != d}
+    return sum(tree_cpu_s(d) for d in daemons - forked)
+
+
+def _identity_batches(batches):
+    # every engine UDF holds package globals, so a worker imports the
+    # package when it first unpickles one; this probe does the same
+    import set_sketch_paper_spark  # noqa: F401
+
+    yield from batches
+
+
+def udf_task_overhead_ms(tasks: int = 16, reps: int = 3) -> float:
+    """L1 fixed cost: Python-worker CPU per task, in ms, of an identity
+    mapInPandas over ``tasks`` one-row partitions, median of ``reps`` after
+    one warm pass.  It is the cost every Python UDF task pays whatever its
+    rows (task set-up in the worker, Arrow framing).  Four task slots: the
+    cost is per worker process, and more slots only start more workers."""
+    spark = _spark(min(CPUS, 4))
+    df = spark.range(tasks, numPartitions=tasks)
+
+    def job():
+        df.mapInPandas(_identity_batches, "id long").collect()
+
+    job()  # starts the workers
+    per_task = []
+    for _ in range(reps):
+        cpu0 = _python_worker_cpu_s()
+        job()
+        per_task.append((_python_worker_cpu_s() - cpu0) / tasks * 1e3)
+    spark.stop()
+    return round(_median(per_task), 1)
 
 
 def run_joint(n_pairs: int = 100_000, m: int = 256, reps: int = 3) -> dict:

@@ -19,4 +19,7 @@ kernels; its OpenMP fork-join becomes Spark partition parallelism; its
 element-wise min/max merges map to algebraic partial+final aggregation.
 """
 
+# installed in every process that imports the package, Python workers included
+from .functions import worker_boot as _worker_boot  # noqa: F401
+
 __version__ = "0.1.0"

@@ -156,6 +156,13 @@ def sketch_distinct(
     an intermediate merge tier so no final-merge group collects more than
     ~fanin partial sketches even if a key appears in every task's partials.
     """
+    internal = {"sketch", "est_distinct"} | ({"_mb"} if merge_fanin else set())
+    clash = sorted(internal & set(keys))
+    if clash:
+        raise ValueError(
+            f"sketch_distinct key column(s) {clash} clash with its internal "
+            "sketch/estimate/merge-bucket columns; rename them first"
+        )
     is_minhash = _check_cfg(cfg)
     state_type = "array<long>" if is_minhash else "binary"
     partial_schema = ", ".join(

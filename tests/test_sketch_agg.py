@@ -131,3 +131,15 @@ def test_sketch_distinct_vs_builtin_hll(events):
     }
     for k in EXACT:
         assert abs(ours[k] - builtin[k]) / builtin[k] < 0.15
+
+
+@pytest.mark.parametrize("key,merge_fanin", [
+    ("sketch", None), ("est_distinct", None), ("_mb", 4),
+])
+def test_sketch_distinct_rejects_internal_key_names(spark, key, merge_fanin):
+    """A key named like one of sketch_distinct's own columns is refused by
+    name, not silently overwritten by the estimate (`est_distinct`) or left
+    to an AnalysisException (`sketch`, and `_mb` under merge_fanin)."""
+    df = spark.createDataFrame([("a", 1)], schema=f"`{key}` string, h long")
+    with pytest.raises(ValueError, match=key):
+        sketch_distinct(df, [key], "h", GHLLConfig(num_registers=64), merge_fanin=merge_fanin)
