@@ -167,6 +167,7 @@ def run_default() -> dict:
     spark.range(1000).selectExpr("sum(id)").collect()
     from pyspark.sql import functions as F
 
+    from set_sketch_paper_spark.functions.blocks import persistent_rdd_ids, release
     from set_sketch_paper_spark.functions.udfs import make_minhash_signature_udf
 
     warm_udf = make_minhash_signature_udf(entrymod.DOC_PCFG)
@@ -185,9 +186,7 @@ def run_default() -> dict:
         reps and the block-manager/GC drag shows up as warm reps running
         SLOWER than cold (observed on the flagship query, r5).  Runs
         outside the timed region."""
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for k in jmap.keySet().toArray():
-            jmap.get(k).unpersist(False)
+        release(spark, persistent_rdd_ids(spark))
 
     def measure(name: str) -> tuple[float, float, float, int]:
         """cold, first-warm, warm-median-of-WARM_REPS, rows."""

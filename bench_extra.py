@@ -44,6 +44,7 @@ def main() -> None:
     spark.range(1000).selectExpr("sum(id)").collect()
     from pyspark.sql import functions as F
 
+    from set_sketch_paper_spark.functions.blocks import persistent_rdd_ids, release
     from set_sketch_paper_spark.functions.udfs import make_minhash_signature_udf
 
     warm_udf = make_minhash_signature_udf(entrymod.DOC_PCFG)
@@ -55,9 +56,7 @@ def main() -> None:
     )
 
     def sweep():
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for k in jmap.keySet().toArray():
-            jmap.get(k).unpersist(False)
+        release(spark, persistent_rdd_ids(spark))
 
     out = {}
     for name in args.queries:

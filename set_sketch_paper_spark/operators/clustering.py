@@ -10,7 +10,9 @@ even on long chains with permuted ids.
 
 localCheckpoint(eager) truncates the iterative lineage each round; without it
 Catalyst re-derives the full chain of joins every iteration and the plan
-grows without bound (the classic iterative-DataFrame trap).
+grows without bound (the classic iterative-DataFrame trap).  A round reads
+only the round before it, whose block is freed once the next is
+materialized; the vertex set and the last round stay held for the caller.
 
 The reference repo has no clustering; this stage turns its pairwise joint
 estimates into the cluster assignments required by the north rule
@@ -20,6 +22,8 @@ estimates into the cluster assignments required by the north rule
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..functions.blocks import materialize, release
 
 # edge sets up to this size take the single-task union-find path
 SMALL_GRAPH_EDGES = 1_000_000
@@ -32,61 +36,6 @@ def _symmetric(edges: DataFrame) -> DataFrame:
     return edges.select("id1", "id2").union(
         edges.select(F.col("id2").alias("id1"), F.col("id1").alias("id2"))
     )
-
-
-def _materialize(df: DataFrame, reliable: bool) -> DataFrame:
-    """Truncate iterative lineage.  ``reliable=True`` uses RDD checkpointing
-    to the session's checkpoint dir (survives executor loss — on a real
-    cluster localCheckpoint blocks die with their executor and the truncated
-    lineage cannot be replayed); default localCheckpoint is the fast
-    single-box mode."""
-    if reliable:
-        return _sever_plan_identity(df.checkpoint(eager=True))
-    return _sever_plan_identity(df.localCheckpoint(eager=True))
-
-
-class _RoundBlockTracker:
-    """Frees the PREVIOUS round's localCheckpoint blocks once the next round
-    is materialized.
-
-    Iterative loops otherwise accumulate one cached RDD per round for the
-    life of the job — pure dead weight, since each round only ever reads the
-    round before it.  The checkpointed RDD has no lineage, so its id is only
-    discoverable by diffing the context's persistent-RDD map around the
-    materialize call (JVM-side map, no driver data).  Reliable-checkpoint
-    mode writes files instead of cache blocks; tracking is a no-op there.
-
-    SINGLE-THREADED ASSUMPTION (ADVICE r5): the before/after diff attributes
-    any RDD persisted between the two snapshots to this tracker, so a
-    SparkSession shared with CONCURRENT jobs could see another thread's
-    blocks unpersisted.  Fine for the current sequential driver use; guard
-    with a session-level lock before running pipelines concurrently.
-    """
-
-    def __init__(self, spark, enabled: bool):
-        self._jsc = spark.sparkContext._jsc
-        self._enabled = enabled
-        self._prev: set[int] = set()
-        self._pinned: set[int] = set()
-
-    def _ids(self) -> set[int]:
-        return {int(k) for k in self._jsc.getPersistentRDDs().keySet().toArray()}
-
-    def materialize(self, df: DataFrame, reliable: bool, pin: bool = False) -> DataFrame:
-        if not self._enabled:
-            return _materialize(df, reliable)
-        before = self._ids()
-        out = _materialize(df, reliable)
-        new = self._ids() - before
-        if pin:  # frames read by EVERY round (e.g. the edge list)
-            self._pinned |= new
-            return out
-        free_now, self._prev = self._prev - self._pinned, new
-        jmap = self._jsc.getPersistentRDDs()
-        for k in jmap.keySet().toArray():
-            if int(k) in free_now:
-                jmap.get(k).unpersist(False)
-        return out
 
 
 def _sever_plan_identity(df: DataFrame) -> DataFrame:
@@ -171,7 +120,9 @@ def connected_components(edges: DataFrame, reliable: bool = False) -> DataFrame:
     should checkpoint it first (the pipeline's inputs already are).
 
     ``reliable=True`` materializes the loop's rounds with reliable RDD
-    checkpoints instead of localCheckpoint (see ``_materialize``).
+    checkpoints to the session's checkpoint dir instead of localCheckpoint:
+    on a real cluster localCheckpoint blocks die with their executor and the
+    truncated lineage cannot be replayed.
     """
     e2 = edges.select("id1", "id2")
     if e2.count() <= SMALL_GRAPH_EDGES:
@@ -208,21 +159,28 @@ def _star_components(edges: DataFrame, reliable: bool = False) -> DataFrame:
     input edge list.  Raises rather than returning half-merged clusters if
     ``MAX_ROUNDS`` rounds do not reach the fixed point.
     """
-    trk = _RoundBlockTracker(edges.sparkSession, enabled=not reliable)
-    verts = trk.materialize(
+    spark = edges.sparkSession
+
+    def checkpoint(df: DataFrame, held: set[int]) -> DataFrame:
+        # sever after the id is read: the severed frame wraps another RDD
+        return _sever_plan_identity(materialize(df, held, reliable=reliable))
+
+    # pinned: read by every round; prev: the previous round's block
+    pinned: set[int] = set()
+    prev: set[int] = set()
+    verts = checkpoint(
         edges.select(F.col("id1").alias("id"))
         .union(edges.select(F.col("id2").alias("id")))
         .distinct(),
-        reliable,
-        pin=True,
+        pinned,
     )
-    e = trk.materialize(
+    e = checkpoint(
         edges.select(
             F.greatest("id1", "id2").alias("id1"), F.least("id1", "id2").alias("id2")
         )
         .filter(F.col("id1") != F.col("id2"))
         .dropDuplicates(["id1", "id2"]),
-        reliable,
+        prev,
     )
 
     e_stats = _edge_set_stats(e)
@@ -258,7 +216,10 @@ def _star_components(edges: DataFrame, reliable: bool = False) -> DataFrame:
             .filter(F.col("id1") != F.col("id2"))
             .dropDuplicates(["id1", "id2"])
         )
-        e = trk.materialize(small, reliable)
+        cur: set[int] = set()
+        e = checkpoint(small, cur)
+        release(spark, prev)
+        prev = cur
         new_stats = _edge_set_stats(e)
         if new_stats == e_stats:
             break

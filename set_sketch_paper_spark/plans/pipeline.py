@@ -32,6 +32,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import PipelineConfig
+from ..functions.blocks import materialize, persistent_rdd_ids, release
 from ..functions.udfs import make_minhash_pair_estimator_udf
 from ..operators import lsh as lsh_ops
 from ..operators.clustering import connected_components
@@ -66,16 +67,9 @@ class PipelineResult:
         pipeline batches in one session need this between batches or dead
         stage blocks accumulate for the session's lifetime.  Returns the
         number of RDDs freed."""
-        if not self._spark or not self._ckpt_rdd_ids:
+        if not self._spark:
             return 0
-        jmap = self._spark.sparkContext._jsc.getPersistentRDDs()
-        n = 0
-        for k in jmap.keySet().toArray():
-            if int(k) in self._ckpt_rdd_ids:
-                jmap.get(k).unpersist(False)
-                n += 1
-        self._ckpt_rdd_ids.clear()
-        return n
+        return release(self._spark, self._ckpt_rdd_ids)
 
 
 class NearDupPipeline:
@@ -92,18 +86,35 @@ class NearDupPipeline:
             return None
         return os.path.join(self.pcfg.checkpoint_dir, stage)
 
-    def _manifest_path(self, stage_dir: str) -> str:
-        return os.path.join(stage_dir, "_MANIFEST.json")
-
-    def _try_resume(self, spark: SparkSession, stage: str) -> DataFrame | None:
+    def _read_manifest(self, stage: str) -> dict | None:
+        """The stage's manifest, or None when there is none or it was
+        written under another config (a config change invalidates it)."""
         d = self._stage_dir(stage)
-        if not d or not os.path.exists(self._manifest_path(d)):
+        path = d and os.path.join(d, "_MANIFEST.json")
+        if not path or not os.path.exists(path):
             return None
-        with open(self._manifest_path(d)) as f:
+        with open(path) as f:
             manifest = json.load(f)
         if manifest.get("config_hash") != self.pcfg.config_hash():
-            return None  # config changed -> checkpoint invalid
-        return spark.read.parquet(d)
+            return None
+        return manifest
+
+    def _write_manifest(self, stage: str, **fields) -> None:
+        d = self._stage_dir(stage)
+        os.makedirs(d, exist_ok=True)
+        manifest = {
+            "stage": stage,
+            "run_id": self.run_id,
+            "config_hash": self.pcfg.config_hash(),
+            **fields,
+        }
+        with open(os.path.join(d, "_MANIFEST.json"), "w") as f:
+            json.dump(manifest, f, indent=1)
+
+    def _try_resume(self, spark: SparkSession, stage: str) -> DataFrame | None:
+        if self._read_manifest(stage) is None:
+            return None
+        return spark.read.parquet(self._stage_dir(stage))
 
     def _checkpoint(self, df: DataFrame, stage: str, t0: float) -> DataFrame:
         """Persist stage output + manifest; returns the materialized frame.
@@ -114,12 +125,7 @@ class NearDupPipeline:
         """
         d = self._stage_dir(stage)
         if not d:
-            jsc = df.sparkSession.sparkContext._jsc
-            before = {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-            out = df.localCheckpoint(eager=True)
-            self._ckpt_rdd_ids |= {
-                int(k) for k in jsc.getPersistentRDDs().keySet().toArray()
-            } - before
+            out = materialize(df, self._ckpt_rdd_ids)
             # rows=-1: a separate count() is one extra job per stage, and at
             # small scale the pipeline is job-overhead-bound; persisted
             # checkpoints below still record exact per-partition rows
@@ -142,16 +148,12 @@ class NearDupPipeline:
             .collect()
         )
         rows = int(sum(r["count"] for r in per_part))
-        manifest = {
-            "stage": stage,
-            "run_id": self.run_id,
-            "config_hash": self.pcfg.config_hash(),
-            "rows": rows,
-            "partitions": {str(r["pid"]): r["count"] for r in per_part},
-            "seconds": time.time() - t0,
-        }
-        with open(self._manifest_path(d), "w") as f:
-            json.dump(manifest, f, indent=1)
+        self._write_manifest(
+            stage,
+            rows=rows,
+            partitions={str(r["pid"]): r["count"] for r in per_part},
+            seconds=time.time() - t0,
+        )
         self.metrics.append(
             StageMetrics(stage, rows, time.time() - t0, False, len(per_part))
         )
@@ -165,20 +167,13 @@ class NearDupPipeline:
         in place (no Exchange on this side).  Resume semantics match the
         path-based checkpoint (config hash in the manifest)."""
         table = f"ssp_{name}_{self.pcfg.config_hash()[:12]}"
-        d = self._stage_dir(name)
         t0 = time.time()
-        if d and os.path.exists(self._manifest_path(d)):
-            with open(self._manifest_path(d)) as f:
-                manifest = json.load(f)
-            if (
-                manifest.get("config_hash") == self.pcfg.config_hash()
-                and spark.catalog.tableExists(table)
-            ):
-                out = spark.table(table)
-                self.metrics.append(
-                    StageMetrics(name, -1, 0.0, True, out.rdd.getNumPartitions())
-                )
-                return out
+        if self._read_manifest(name) is not None and spark.catalog.tableExists(table):
+            out = spark.table(table)
+            self.metrics.append(
+                StageMetrics(name, -1, 0.0, True, out.rdd.getNumPartitions())
+            )
+            return out
         df = build()
         # a fresh session has an empty catalog, but the managed-table
         # LOCATION from a previous session may survive on disk — drop both
@@ -199,22 +194,10 @@ class NearDupPipeline:
         )
         out = spark.table(table)
         rows = out.count()
-        if d:
-            os.makedirs(d, exist_ok=True)
-            with open(self._manifest_path(d), "w") as f:
-                json.dump(
-                    {
-                        "stage": name,
-                        "run_id": self.run_id,
-                        "config_hash": self.pcfg.config_hash(),
-                        "rows": rows,
-                        "table": table,
-                        "buckets": n_buckets,
-                        "seconds": time.time() - t0,
-                    },
-                    f,
-                    indent=1,
-                )
+        if self._stage_dir(name):
+            self._write_manifest(
+                name, rows=rows, table=table, buckets=n_buckets, seconds=time.time() - t0
+            )
         self.metrics.append(
             StageMetrics(name, rows, time.time() - t0, False, out.rdd.getNumPartitions())
         )
@@ -238,16 +221,13 @@ class NearDupPipeline:
             self.metrics.append(StageMetrics(name, -1, time.time() - t0, False, -1))
             return out
         t0 = time.time()
-        jsc = spark.sparkContext._jsc
-        before = {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+        before = persistent_rdd_ids(spark)
         out = self._checkpoint(build(), name, t0)
-        # anything build() left persistent (e.g. the CC loop's final-round
-        # and pinned edge blocks) is dead once the stage itself is
-        # checkpointed — reclaim it now, keeping only the stage's own blocks
-        jmap = jsc.getPersistentRDDs()
-        for k in jmap.keySet().toArray():
-            if int(k) not in before and int(k) not in self._ckpt_rdd_ids:
-                jmap.get(k).unpersist(False)
+        # what build() left persistent (the CC loop's last blocks, which
+        # feed its lazy result) is dead once the stage is checkpointed.
+        # This diff would also free blocks that CONCURRENT jobs on the
+        # session persist meanwhile: lock before running pipelines in parallel
+        release(spark, persistent_rdd_ids(spark) - before - self._ckpt_rdd_ids)
         return out
 
     # -- pipeline -----------------------------------------------------------

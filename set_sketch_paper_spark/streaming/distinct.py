@@ -27,6 +27,7 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.blocks import materialize, release
 from ..operators.kmv import kmv_distinct, kmv_merge_col, with_kmv_estimate
 from .stream_dedup import (
     _fs_read_text,
@@ -129,14 +130,15 @@ def compact_kmv_store(spark, store_path: str, keys, k: int) -> int:
     if merged is None:
         return 0
     # materialize BEFORE overwriting a partition the plan reads from; the
-    # lineage-free block is freed immediately after (cached-block hygiene)
-    ckpt = merged.localCheckpoint(eager=True)
+    # block is freed as soon as it is written
+    held: set[int] = set()
+    ckpt = materialize(merged, held)
     try:
         ckpt.write.mode("overwrite").parquet(
             os.path.join(store_path, "batch_id=0")
         )
     finally:
-        ckpt.unpersist()
+        release(spark, held)
     from .stream_dedup import _hadoop_fs
 
     removed = 0

@@ -31,6 +31,7 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
+from ..functions.blocks import materialize, release
 from ..operators.signatures import with_content_sha, with_minhash_signature
 
 STORE_FORMAT = "sig:binary,bands:strided,layout:batch_id-partitions"
@@ -231,7 +232,10 @@ def foreach_batch_near_dup(pcfg: PipelineConfig, signature_store_path: str,
     those pairs.
 
     ``sink``: optional callable(pairs_df, batch_id) for downstream
-    clustering/persistence; defaults to materializing the count.
+    clustering/persistence; defaults to materializing the count.  The sink
+    must consume ``pairs_df`` before it returns, as Spark's foreachBatch
+    already requires of the batch frame: the handler then frees the
+    micro-batch's checkpoint block that ``pairs_df`` reads.
 
     Usage::
 
@@ -253,32 +257,36 @@ def foreach_batch_near_dup(pcfg: PipelineConfig, signature_store_path: str,
             # a doc_id the store already holds contributes nothing new —
             # and must not pair against its own stored signature
             signed = signed.join(store.select(id_col), [id_col], "left_anti")
-        new_only = signed.localCheckpoint(eager=True)  # sketch once: reused for append + join
-        # STORE FIRST: overwrite this batch's own partition (idempotent on
-        # replay), so emitted pairs always refer to durably stored signatures
-        new_only.write.mode("overwrite").parquet(
-            os.path.join(signature_store_path, f"batch_id={batch_id}")
-        )
-        from ..operators import lsh as lsh_ops
-
-        if store is not None:
-            pairs = incremental_candidates(new_only, store, pcfg, id_col)
-            all_sigs = store.select(id_col, "sig", "n_shingles").union(
-                new_only.select(id_col, "sig", "n_shingles")
+        held: set[int] = set()
+        new_only = materialize(signed, held)  # sketch once: reused for append + join
+        try:
+            # STORE FIRST: overwrite this batch's own partition (idempotent on
+            # replay), so emitted pairs always refer to durably stored signatures
+            new_only.write.mode("overwrite").parquet(
+                os.path.join(signature_store_path, f"batch_id={batch_id}")
             )
-        else:
-            pairs = lsh_ops.candidate_pairs(new_only, pcfg.lsh, id_col=id_col)
-            all_sigs = new_only.select(id_col, "sig", "n_shingles")
-        if verify:
-            from ..functions.udfs import make_minhash_pair_estimator_udf
+            from ..operators import lsh as lsh_ops
 
-            est_udf = make_minhash_pair_estimator_udf(pcfg.minhash, "original")
-            pairs = lsh_ops.verified_pairs(
-                pairs, all_sigs, est_udf, pcfg.jaccard_threshold, id_col=id_col
-            )
-        if sink is not None:
-            sink(pairs, batch_id)
-        else:
-            pairs.count()
+            if store is not None:
+                pairs = incremental_candidates(new_only, store, pcfg, id_col)
+                all_sigs = store.select(id_col, "sig", "n_shingles").union(
+                    new_only.select(id_col, "sig", "n_shingles")
+                )
+            else:
+                pairs = lsh_ops.candidate_pairs(new_only, pcfg.lsh, id_col=id_col)
+                all_sigs = new_only.select(id_col, "sig", "n_shingles")
+            if verify:
+                from ..functions.udfs import make_minhash_pair_estimator_udf
+
+                est_udf = make_minhash_pair_estimator_udf(pcfg.minhash, "original")
+                pairs = lsh_ops.verified_pairs(
+                    pairs, all_sigs, est_udf, pcfg.jaccard_threshold, id_col=id_col
+                )
+            if sink is not None:
+                sink(pairs, batch_id)
+            else:
+                pairs.count()
+        finally:
+            release(spark, held)
 
     return handle

@@ -1,15 +1,11 @@
-"""Cached-block hygiene for iterative/staged operators (r5).
+"""Cached-block hygiene (``functions.blocks``).
 
 localCheckpoint blocks have no lineage, so Spark can never evict-and-
 recompute them — anything not explicitly unpersisted lives for the session.
-These tests pin the three reclamation layers:
-
-1. the CC loop frees each round's blocks as soon as the next round is
-   materialized (bounded steady-state memory for long loops),
-2. a pipeline stage sweeps everything its build left behind once the stage
-   itself is checkpointed,
-3. ``PipelineResult.release_cache`` returns the stage blocks themselves,
-   restoring the session to its pre-run cache footprint.
+Every site that materializes a block records its RDD id in a ``held`` set it
+owns and releases that set once the frame is dead.  These tests pin the id
+read itself and its owners: the CC loop (previous round freed as the next is
+materialized), the pipeline stage sweep and ``PipelineResult.release_cache``.
 """
 
 from __future__ import annotations
@@ -22,6 +18,7 @@ from set_sketch_paper_spark.config import (
     PipelineConfig,
     ShingleConfig,
 )
+from set_sketch_paper_spark.functions.blocks import materialize, release
 from set_sketch_paper_spark.operators.clustering import _star_components
 from set_sketch_paper_spark.plans.pipeline import NearDupPipeline
 from set_sketch_paper_spark.sources.synthetic import files_table
@@ -34,6 +31,30 @@ def _persistent_ids(spark) -> set[int]:
     while the set of ids *this* test introduces does not."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     return {int(i) for i in jmap.keySet().toArray()}
+
+
+def test_materialize_release_own_exactly_their_block(spark, tmp_path):
+    """The block id is read from the checkpointed frame's LogicalRDD node, a
+    Spark internal: a Spark whose plan shape differs fails here instead of
+    leaking blocks."""
+    df = spark.range(100).select("id", (F.col("id") * 2).alias("x"))
+    base = _persistent_ids(spark)
+    held: set[int] = set()
+    out = materialize(df, held)  # kept referenced: no GC-driven cleanup
+    assert held == _persistent_ids(spark) - base and len(held) == 1
+    other = spark.range(10).localCheckpoint(eager=True)
+    other_ids = _persistent_ids(spark) - base - held
+    assert release(spark, held) == 1 and held == set()
+    assert _persistent_ids(spark) - base == other_ids
+    assert other.count() == 10
+    assert release(spark, held) == 0
+    release(spark, other_ids)
+    del out
+
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "rdd_ckpt"))
+    before = _persistent_ids(spark)
+    assert materialize(df, held, reliable=True).count() == 100
+    assert held == set() and not (_persistent_ids(spark) - before)
 
 
 def test_cc_loop_does_not_accumulate_round_blocks(spark):

@@ -364,7 +364,9 @@ def test_foreach_batch_replay_idempotent(spark, tmp_path):
 
 def test_foreach_batch_reingested_ids_not_duplicated(spark, tmp_path):
     """A later batch re-delivering already-stored doc_ids must not duplicate
-    them in the store nor pair a document against its own stored signature."""
+    them in the store nor pair a document against its own stored signature,
+    and the handler frees its per-batch checkpoint block."""
+    from set_sketch_paper_spark.functions.blocks import persistent_rdd_ids
     from set_sketch_paper_spark.streaming.stream_dedup import foreach_batch_near_dup
 
     pdf = files_pandas(150, seed=42)
@@ -386,8 +388,10 @@ def test_foreach_batch_reingested_ids_not_duplicated(spark, tmp_path):
         PCFG, store, id_col="doc_id", content_col="content", sink=sink
     )
     t1 = full.filter(F.xxhash64("doc_id") % 2 == 0)
+    before = persistent_rdd_ids(spark)
     handle(t1, 0)
     handle(full, 1)  # batch 1 re-delivers all of t1 plus the new half
+    assert not (persistent_rdd_ids(spark) - before)
     ids = [r["doc_id"] for r in spark.read.parquet(store).select("doc_id").collect()]
     assert len(ids) == len(set(ids)) == full.count()
     for i1, i2 in pairs_by_batch[1]:
@@ -452,6 +456,7 @@ def test_kmv_store_merge_replay_and_compaction(spark, tmp_path):
     bit-for-bit, replay is a no-op (idempotent merge), compaction folds to
     one partition without changing the state, and the manifest refuses
     mixed-k appends."""
+    from set_sketch_paper_spark.functions.blocks import persistent_rdd_ids
     from set_sketch_paper_spark.operators.kmv import kmv_distinct
     from set_sketch_paper_spark.streaming.distinct import (
         compact_kmv_store,
@@ -494,8 +499,11 @@ def test_kmv_store_merge_replay_and_compaction(spark, tmp_path):
     }
     assert est["buy"]["n_sk"] == 5 and est["buy"]["est_q"] == 5_000_000
     assert est["click"]["n_sk"] == k  # 60 distinct > k
-    # compaction: one partition left, identical state
+    # compaction: one partition left, identical state, and its checkpoint
+    # block freed (DataFrame.unpersist() does not free a localCheckpoint)
+    before = persistent_rdd_ids(spark)
     assert compact_kmv_store(spark, store, "event_type", k) == 1
+    assert not (persistent_rdd_ids(spark) - before)
     dirs = [d for d in os.listdir(store) if d.startswith("batch_id=")]
     assert dirs == ["batch_id=0"]
     assert state() == want
