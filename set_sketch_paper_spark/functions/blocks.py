@@ -1,8 +1,12 @@
 """Ownership of localCheckpoint blocks.
 
-A localCheckpoint block has no lineage, so Spark never evicts it: each site
-that makes one records its RDD id in a ``held`` set it owns, and releases
-that set once the frames reading it are dead.
+A localCheckpoint block has no lineage, so the block manager never evicts
+it for space.  Spark's ContextCleaner frees it only after every reference to
+its RDD is gone AND a driver JVM GC has run, which an idle driver does every
+``spark.cleaner.periodicGC.interval`` (30 min by default): a long-lived
+session can pin one block per call for that long.  So each site that makes
+one records its RDD id in a ``held`` set it owns, and releases that set once
+the frames reading it are dead.
 """
 
 from __future__ import annotations

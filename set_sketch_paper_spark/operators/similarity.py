@@ -128,8 +128,10 @@ def _coded(corpus: DataFrame, id_col: str, vec_col: str, n_bits: int,
         # localCheckpoint, NOT persist: a .persist() here is registered in
         # the SQL CacheManager and never evicted by GC, so repeated ANN
         # queries in a long-lived session would pin storage forever;
-        # localCheckpoint blocks are dropped by the ContextCleaner as soon
-        # as the plan becomes unreachable
+        # the ContextCleaner drops a localCheckpoint block once the plan is
+        # unreachable AND a driver JVM GC has run — up to
+        # spark.cleaner.periodicGC.interval (30 min) later on an idle
+        # driver (functions/blocks.py)
         .localCheckpoint(eager=True)
     )
     slim = coded.select(
@@ -462,8 +464,8 @@ def ivf_ann_topk(
     # checkpoint RANKED, not base: ranked carries (_id, qv, norm, _cells),
     # so members, probes AND the scoring vecs all read one materialization —
     # previously the interpreted 16-cell ranking re-ran for every branch
-    # (members + probes + scoring = 3x at sf1.0).  ContextCleaner frees the
-    # blocks when unreachable (same rationale as _coded).
+    # (members + probes + scoring = 3x at sf1.0).  The ContextCleaner frees
+    # the blocks once unreachable and after a driver JVM GC (as for _coded).
     ranked = _ivf_ranked_cells(base, cents_row).localCheckpoint(eager=True)
 
     # members + probe entries shuffled ONCE into per-cell groups and scored

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
 from ..functions.blocks import materialize, release
+from ..operators import lsh as lsh_ops
 from ..operators.signatures import with_content_sha, with_minhash_signature
 
 STORE_FORMAT = "sig:binary,bands:strided,layout:batch_id-partitions"
@@ -156,59 +157,45 @@ def _list_batch_dirs(store_path: str, exclude_batch_id=None, spark=None) -> list
     return sorted(parts)
 
 
-def read_signature_store(spark, store_path: str, exclude_batch_id=None):
+def read_signature_store(spark, store_path: str, exclude_batch_id=None, schema=None):
     """The store as one DataFrame, or None when empty.  ``exclude_batch_id``
     drops that batch's partition from the listing — essential on recovery
     replay, where a half-written partition for the CURRENT batch may already
-    exist and must not feed its own candidate join."""
+    exist and must not feed its own candidate join.  ``schema`` (the signed
+    frame's, which the store was written from) skips parquet schema
+    inference, a Spark job of its own on every read."""
     parts = _list_batch_dirs(store_path, exclude_batch_id, spark=spark)
     if not parts:
         return None
-    df = spark.read.option("basePath", store_path).parquet(
-        *[os.path.join(store_path, p) for p in parts]
-    )
+    reader = spark.read.option("basePath", store_path)
+    if schema is not None:
+        reader = reader.schema(schema)
+    df = reader.parquet(*[os.path.join(store_path, p) for p in parts])
     return df.drop("batch_id")
 
 
 def incremental_candidates(
-    batch_signed: DataFrame, store: DataFrame, pcfg: PipelineConfig,
+    new_signed: DataFrame, old_signed: DataFrame, pcfg: PipelineConfig,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Candidate pairs INVOLVING the micro-batch only: band-join the batch's
-    exploded bands against the store's (new-vs-all), never all-vs-all.
+    """Candidate pairs INVOLVING a new id (new-vs-old plus new-vs-new),
+    never old-vs-old: exactly the full-corpus candidate set restricted to
+    pairs with >= 1 new id.
 
-    Per-batch work is O(|batch| x bucket hit rate), independent of store
-    size on the batch side; the store side is one partitioned scan + hash
-    join on band_hash.  The small batch side is broadcast.
-    Output: (id1 < id2) distinct pairs where at least one id is new.
+    Both sides' band members go into ONE ``bucket_pairs`` with a ``_nw``
+    flag, so band_cap applies to the COMBINED bucket size, as the
+    full-corpus path applies it; a per-side cap would keep buckets the full
+    path drops.  Buckets with no new member are skipped before expansion,
+    so expansion work scales with the new side's bucket hits.  Ids must be
+    disjoint across the two frames (they identify the side).
+    Output: distinct (id1 < id2) pairs.
     """
-    from ..operators import lsh as lsh_ops
-
-    new_bands = lsh_ops.explode_bands(batch_signed, id_col).withColumnRenamed("_id", "_new_id")
-    store_bands = lsh_ops.explode_bands(store, id_col).withColumnRenamed("_id", "_store_id")
-    # store-side hot-band cap (same skew guard as the batch band_cap): a
-    # boilerplate band with f store members would emit f rows per batch hit.
-    # The per-bucket count is one map-side-combinable agg over the store
-    # bands (tiny output: one row per occupied bucket); the hot list is
-    # smaller still, so the exclusion is a broadcast anti-join.
-    hot = (
-        store_bands.groupBy("band_hash")
-        .agg(F.count(F.lit(1)).alias("_bsz"))
-        .filter(F.col("_bsz") > pcfg.lsh.band_cap)
-        .select("band_hash")
+    members = lsh_ops.explode_bands(new_signed, id_col).withColumn("_nw", F.lit(True))
+    members = members.unionByName(
+        lsh_ops.explode_bands(old_signed, id_col).withColumn("_nw", F.lit(False))
     )
-    store_ok = store_bands.join(F.broadcast(hot), ["band_hash"], "left_anti")
-    # new-vs-store (store excludes this batch's partition) + new-vs-new
-    cross = (
-        store_ok.join(F.broadcast(new_bands), ["band_hash"])
-        .filter(F.col("_store_id") != F.col("_new_id"))
-        .select(
-            F.least("_store_id", "_new_id").alias("id1"),
-            F.greatest("_store_id", "_new_id").alias("id2"),
-        )
-    )
-    within = lsh_ops.candidate_pairs(batch_signed, pcfg.lsh, id_col=id_col)
-    return cross.union(within.select("id1", "id2")).dropDuplicates(["id1", "id2"])
+    pairs, _ = lsh_ops.bucket_pairs(members, "band_hash", pcfg.lsh.band_cap, need="_nw")
+    return pairs.dropDuplicates(["id1", "id2"])
 
 
 def foreach_batch_near_dup(pcfg: PipelineConfig, signature_store_path: str,
@@ -225,11 +212,14 @@ def foreach_batch_near_dup(pcfg: PipelineConfig, signature_store_path: str,
     document re-ingested by a later batch neither duplicates in the store
     nor re-pairs against itself.
 
-    ``verify=True`` runs the same known-cardinality joint estimation +
-    threshold as the batch pipeline over the incremental candidates (both
-    pair sides' signatures come from the store ∪ batch), so the streamed
-    verified pairs are bit-identical to what a batch run would emit for
-    those pairs.
+    Candidates come from ``incremental_candidates``, the same function
+    ``near_dup_against_snapshot`` uses: band_cap applies to each bucket's
+    COMBINED size (store members + batch members), so a bucket the batch
+    pushes over the cap is dropped, exactly as a full-corpus run drops it.
+    ``verify=True`` then runs the batch pipeline's known-cardinality joint
+    estimation + threshold (both pair sides' signatures come from the store
+    ∪ batch), so the streamed verified pairs are bit-identical to the
+    full-corpus verified pairs that involve a batch id.
 
     ``sink``: optional callable(pairs_df, batch_id) for downstream
     clustering/persistence; defaults to materializing the count.  The sink
@@ -252,11 +242,14 @@ def foreach_batch_near_dup(pcfg: PipelineConfig, signature_store_path: str,
             .select(id_col, "sig", "bands", "n_shingles")
             .dropDuplicates([id_col])
         )
-        store = read_signature_store(spark, signature_store_path, exclude_batch_id=batch_id)
-        if store is not None:
-            # a doc_id the store already holds contributes nothing new —
-            # and must not pair against its own stored signature
-            signed = signed.join(store.select(id_col), [id_col], "left_anti")
+        store = read_signature_store(
+            spark, signature_store_path, exclude_batch_id=batch_id, schema=signed.schema
+        )
+        if store is None:  # first batch: pair against an empty store
+            store = spark.createDataFrame([], signed.schema)
+        # a doc_id the store already holds contributes nothing new — and
+        # must not pair against its own stored signature
+        signed = signed.join(store.select(id_col), [id_col], "left_anti")
         held: set[int] = set()
         new_only = materialize(signed, held)  # sketch once: reused for append + join
         try:
@@ -265,22 +258,14 @@ def foreach_batch_near_dup(pcfg: PipelineConfig, signature_store_path: str,
             new_only.write.mode("overwrite").parquet(
                 os.path.join(signature_store_path, f"batch_id={batch_id}")
             )
-            from ..operators import lsh as lsh_ops
-
-            if store is not None:
-                pairs = incremental_candidates(new_only, store, pcfg, id_col)
-                all_sigs = store.select(id_col, "sig", "n_shingles").union(
-                    new_only.select(id_col, "sig", "n_shingles")
-                )
-            else:
-                pairs = lsh_ops.candidate_pairs(new_only, pcfg.lsh, id_col=id_col)
-                all_sigs = new_only.select(id_col, "sig", "n_shingles")
+            pairs = incremental_candidates(new_only, store, pcfg, id_col)
             if verify:
                 from ..functions.udfs import make_minhash_pair_estimator_udf
 
                 est_udf = make_minhash_pair_estimator_udf(pcfg.minhash, "original")
                 pairs = lsh_ops.verified_pairs(
-                    pairs, all_sigs, est_udf, pcfg.jaccard_threshold, id_col=id_col
+                    pairs, new_only.unionByName(store), est_udf,
+                    pcfg.jaccard_threshold, id_col=id_col,
                 )
             if sink is not None:
                 sink(pairs, batch_id)

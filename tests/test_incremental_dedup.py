@@ -50,7 +50,9 @@ def test_exact_incremental_empty_snapshot(spark):
 
 def test_near_dup_incremental_never_snapshot_vs_snapshot(spark):
     """Two identical snapshot docs must NOT pair with each other; a new doc
-    pairs with its snapshot twin and with its in-batch twin."""
+    pairs with its snapshot twin and with its in-batch twin.  Every job the
+    call runs, the per-side signature checkpoints included (they run in
+    pool threads), carries the caller's job group."""
     from set_sketch_paper_spark.config import (
         LSHConfig, MinHashConfig, PipelineConfig, ShingleConfig,
     )
@@ -65,10 +67,22 @@ def test_near_dup_incremental_never_snapshot_vs_snapshot(spark):
     other = "completely different words about winter mountain snow ice peak cold"
     old = _docs(spark, [(0, text), (2, text), (4, other)])
     new = _docs(spark, [(1, text), (3, text)])
-    pairs = {
-        (r["id1"], r["id2"])
-        for r in near_dup_against_snapshot(new, old, pcfg).collect()
-    }
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("snapshot_near_dup", "near_dup_against_snapshot")
+    try:
+        pairs = {
+            (r["id1"], r["id2"])
+            for r in near_dup_against_snapshot(new, old, pcfg).collect()
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(tracker.getJobIdsForGroup("snapshot_near_dup")) >= 3
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
     # every pair involves a new (odd) id
     assert all(i1 % 2 == 1 or i2 % 2 == 1 for i1, i2 in pairs)
     assert (0, 2) not in pairs and (0, 4) not in pairs and (2, 4) not in pairs

@@ -188,3 +188,12 @@ PAIR_PATH_EXCHANGES = {
 def test_pair_path_exchange_counts(spark, name):
     plan = _plan(entrymod.queries()[name](spark, SF_DIR))
     assert plan.count("Exchange") == PAIR_PATH_EXCHANGES[name], plan[:3000]
+
+
+def test_incremental_near_dup_signs_each_side_once(spark):
+    """incremental_near_dup materializes each signed side once: the plan
+    keeps only the verification estimator's 2 ArrowEvalPython nodes.
+    Without the per-side checkpoints the signature UDF is planned once per
+    read of a side (8 nodes here)."""
+    plan = _plan(entrymod.queries()["incremental_near_dup"](spark, SF_DIR))
+    assert plan.count("ArrowEvalPython") == 2, plan[:3000]

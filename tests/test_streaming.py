@@ -124,7 +124,10 @@ def test_incremental_candidates_equal_batch_vs_all(spark, tmp_path):
     """Incrementality contract: candidates emitted for a micro-batch are
     EXACTLY the full-corpus candidate pairs that involve a new id — the
     batch never re-derives store-vs-store pairs (per-batch work scales with
-    batch size, not store size)."""
+    batch size, not store size).  band_cap=2 makes buckets cross the cap
+    only once the batch's members join the store's."""
+    import dataclasses
+
     from set_sketch_paper_spark.operators import lsh as lsh_ops
     from set_sketch_paper_spark.streaming.stream_dedup import incremental_candidates
 
@@ -134,24 +137,30 @@ def test_incremental_candidates_equal_batch_vs_all(spark, tmp_path):
         .withColumn("doc_id", F.xxhash64("repo", "path", "commit"))
         .select("doc_id", "content")
     )
-    signed_all = with_minhash_signature(full, PCFG).select("doc_id", "sig", "bands", "n_shingles")
-    store = signed_all.filter(F.xxhash64("doc_id") % 4 != 0).localCheckpoint()
-    batch = signed_all.filter(F.xxhash64("doc_id") % 4 == 0).localCheckpoint()
+    signed_all = (
+        with_minhash_signature(full, PCFG)
+        .select("doc_id", "sig", "bands", "n_shingles")
+        .localCheckpoint()
+    )
+    store = signed_all.filter(F.xxhash64("doc_id") % 4 != 0)
+    batch = signed_all.filter(F.xxhash64("doc_id") % 4 == 0)
     new_ids = {r["doc_id"] for r in batch.select("doc_id").collect()}
     assert 50 < len(new_ids) < 150
 
-    got = {
-        (r["id1"], r["id2"])
-        for r in incremental_candidates(batch, store, PCFG, id_col="doc_id").collect()
-    }
-    all_pairs = {
-        (r["id1"], r["id2"])
-        for r in lsh_ops.candidate_pairs(signed_all, PCFG.lsh, id_col="doc_id").collect()
-    }
-    want = {p for p in all_pairs if p[0] in new_ids or p[1] in new_ids}
-    assert got == want
-    # and the store-only pairs were NOT recomputed
-    assert all(p[0] in new_ids or p[1] in new_ids for p in got)
+    for band_cap in (500, 2):
+        pcfg = dataclasses.replace(PCFG, lsh=dataclasses.replace(PCFG.lsh, band_cap=band_cap))
+        got = {
+            (r["id1"], r["id2"])
+            for r in incremental_candidates(batch, store, pcfg, id_col="doc_id").collect()
+        }
+        all_pairs = {
+            (r["id1"], r["id2"])
+            for r in lsh_ops.candidate_pairs(signed_all, pcfg.lsh, id_col="doc_id").collect()
+        }
+        want = {p for p in all_pairs if p[0] in new_ids or p[1] in new_ids}
+        assert got == want, band_cap
+        # and the store-only pairs were NOT recomputed
+        assert all(p[0] in new_ids or p[1] in new_ids for p in got)
 
 
 def test_streamed_verified_pairs_equal_batch(spark, tmp_path):
@@ -194,27 +203,85 @@ def test_streamed_verified_pairs_equal_batch(spark, tmp_path):
 
 
 def test_incremental_store_hot_band_capped(spark):
-    """A boilerplate band with more store members than band_cap is excluded
-    from the incremental join (same skew guard as the batch path)."""
+    """A boilerplate band whose COMBINED (store + batch) membership exceeds
+    band_cap is excluded from the incremental pairs (same skew guard as the
+    batch path): hot in the store alone, and hot only once the batch's
+    members join."""
     import dataclasses
 
     from set_sketch_paper_spark.streaming.stream_dedup import incremental_candidates
 
-    pcfg = dataclasses.replace(PCFG, lsh=dataclasses.replace(PCFG.lsh, band_cap=5))
     hot, cold = 7777, 4242
-    store = spark.createDataFrame(
-        [(i, [hot]) for i in range(10)] + [(50, [cold])],
-        "doc_id long, bands array<long>",
+    # (store ids in the hot band, batch ids in the hot band, band_cap)
+    for store_hot, batch_hot, cap in ((range(10), [100], 5), (range(3), [100, 102], 4)):
+        pcfg = dataclasses.replace(PCFG, lsh=dataclasses.replace(PCFG.lsh, band_cap=cap))
+        store = spark.createDataFrame(
+            [(i, [hot]) for i in store_hot] + [(50, [cold])],
+            "doc_id long, bands array<long>",
+        )
+        batch = spark.createDataFrame(
+            [(i, [hot]) for i in batch_hot] + [(101, [cold])],
+            "doc_id long, bands array<long>",
+        )
+        got = {
+            (r["id1"], r["id2"])
+            for r in incremental_candidates(batch, store, pcfg, id_col="doc_id").collect()
+        }
+        # the hot band contributes nothing; the cold band pairs
+        assert got == {(50, 101)}, (len(store_hot), len(batch_hot), cap)
+
+
+def test_foreach_batch_equals_snapshot_path_on_capped_bucket(spark, tmp_path, monkeypatch):
+    """Five identical texts (3 stored + 2 new) with band_cap=4: every band
+    bucket holds 5 > 4 members, so the handler drops it exactly as
+    near_dup_against_snapshot does; a twin pair beside it (1 stored + 1
+    new) is emitted by both with the same estimate.  The handler reads the
+    store with the signed frame's schema, so that read runs no Spark job
+    (no parquet schema inference)."""
+    import dataclasses
+
+    from set_sketch_paper_spark.operators.dedup import near_dup_against_snapshot
+    from set_sketch_paper_spark.streaming import stream_dedup
+
+    sc = spark.sparkContext
+    real_read, reads = stream_dedup.read_signature_store, []
+
+    def labelled_read(*args, **kwargs):
+        sc.setJobGroup("store_read", "signature store read")
+        try:
+            out = real_read(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        reads.append(out is not None)
+        return out
+
+    monkeypatch.setattr(stream_dedup, "read_signature_store", labelled_read)
+    pcfg = dataclasses.replace(PCFG, lsh=dataclasses.replace(PCFG.lsh, band_cap=4))
+    hot = "the quick brown fox jumps over the lazy dog again and again ok"
+    twin = "completely different words about winter mountain snow ice peak cold"
+    old = spark.createDataFrame(
+        [(0, hot), (2, hot), (4, hot), (6, twin)], "doc_id long, content string"
     )
-    batch = spark.createDataFrame(
-        [(100, [hot]), (101, [cold])], "doc_id long, bands array<long>"
-    )
-    got = {
-        (r["id1"], r["id2"])
-        for r in incremental_candidates(batch, store, pcfg, id_col="doc_id").collect()
+    new = spark.createDataFrame([(1, hot), (3, hot), (7, twin)], "doc_id long, content string")
+    emitted: dict = {}
+
+    def sink(pairs_df, batch_id):
+        emitted[batch_id] = {(r["id1"], r["id2"]): r["est_jaccard"] for r in pairs_df.collect()}
+
+    handle = foreach_batch_near_dup(pcfg, str(tmp_path / "cstore"), sink=sink, verify=True)
+    handle(old, 0)
+    handle(new, 1)
+    want = {
+        (r["id1"], r["id2"]): r["est_jaccard"]
+        for r in near_dup_against_snapshot(new, old, pcfg).collect()
     }
-    # the hot band (10 > cap=5) contributes nothing; the cold band pairs
-    assert got == {(50, 101)}
+    assert set(want) == {(6, 7)}
+    assert emitted[1] == want
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert reads == [False, True]
+    assert list(sc.statusTracker().getJobIdsForGroup("store_read")) == []
 
 
 def test_store_manifest_refuses_config_mismatch(tmp_path):
