@@ -15,7 +15,9 @@ Stage graph (all DataFrame ops; SURVEY.md §7.1 step 3-4):
 
 Checkpointing / resume: each stage optionally persists to
 ``<checkpoint_dir>/<stage>`` as parquet with a manifest JSON carrying the
-config hash, row count, timing and lineage; a resumed run with the same
+config hash, row count, timing and lineage (written beside the parquet
+through the session's Hadoop FS, ``functions/store_fs.py``, so any
+checkpoint_dir scheme resumes from any driver); a resumed run with the same
 config hash reads the parquet instead of recomputing (north rule:
 "resumable from checkpoint with per-partition lineage + metrics").  A config
 change invalidates downstream checkpoints (mirrors the reference's merge
@@ -24,7 +26,6 @@ precondition assert(config == other.config), sketch.hpp:1021).
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from dataclasses import dataclass, field
@@ -33,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import PipelineConfig
 from ..functions.blocks import materialize, persistent_rdd_ids, release
+from ..functions.store_fs import delete, read_manifest, write_manifest
 from ..functions.udfs import make_minhash_pair_estimator_udf
 from ..operators import lsh as lsh_ops
 from ..operators.clustering import connected_components
@@ -86,33 +88,29 @@ class NearDupPipeline:
             return None
         return os.path.join(self.pcfg.checkpoint_dir, stage)
 
-    def _read_manifest(self, stage: str) -> dict | None:
+    def _manifest_path(self, stage: str) -> str:
+        return os.path.join(self._stage_dir(stage), "_MANIFEST.json")
+
+    def _read_manifest(self, spark: SparkSession, stage: str) -> dict | None:
         """The stage's manifest, or None when there is none or it was
         written under another config (a config change invalidates it)."""
-        d = self._stage_dir(stage)
-        path = d and os.path.join(d, "_MANIFEST.json")
-        if not path or not os.path.exists(path):
+        if not self._stage_dir(stage):
             return None
-        with open(path) as f:
-            manifest = json.load(f)
-        if manifest.get("config_hash") != self.pcfg.config_hash():
+        manifest = read_manifest(spark, self._manifest_path(stage))
+        if manifest is None or manifest.get("config_hash") != self.pcfg.config_hash():
             return None
         return manifest
 
-    def _write_manifest(self, stage: str, **fields) -> None:
-        d = self._stage_dir(stage)
-        os.makedirs(d, exist_ok=True)
-        manifest = {
+    def _write_manifest(self, spark: SparkSession, stage: str, **fields) -> None:
+        write_manifest(spark, self._manifest_path(stage), {
             "stage": stage,
             "run_id": self.run_id,
             "config_hash": self.pcfg.config_hash(),
             **fields,
-        }
-        with open(os.path.join(d, "_MANIFEST.json"), "w") as f:
-            json.dump(manifest, f, indent=1)
+        })
 
     def _try_resume(self, spark: SparkSession, stage: str) -> DataFrame | None:
-        if self._read_manifest(stage) is None:
+        if self._read_manifest(spark, stage) is None:
             return None
         return spark.read.parquet(self._stage_dir(stage))
 
@@ -149,6 +147,7 @@ class NearDupPipeline:
         )
         rows = int(sum(r["count"] for r in per_part))
         self._write_manifest(
+            spark,
             stage,
             rows=rows,
             partitions={str(r["pid"]): r["count"] for r in per_part},
@@ -165,10 +164,14 @@ class NearDupPipeline:
         """Checkpoint a stage as a parquet table bucketed+sorted by
         ``bucket_col``: downstream equi-joins on that column scan the table
         in place (no Exchange on this side).  Resume semantics match the
-        path-based checkpoint (config hash in the manifest)."""
+        path-based checkpoint (config hash in the manifest), with one open
+        fault: resume also needs the ``ssp_<name>_*`` table in the
+        session catalog, so a NEW session (empty catalog) rebuilds this
+        stage even though the manifest and the table files survive; the
+        other stages still resume from their parquet."""
         table = f"ssp_{name}_{self.pcfg.config_hash()[:12]}"
         t0 = time.time()
-        if self._read_manifest(name) is not None and spark.catalog.tableExists(table):
+        if self._read_manifest(spark, name) is not None and spark.catalog.tableExists(table):
             out = spark.table(table)
             self.metrics.append(
                 StageMetrics(name, -1, 0.0, True, out.rdd.getNumPartitions())
@@ -180,11 +183,7 @@ class NearDupPipeline:
         # or saveAsTable fails with LOCATION_ALREADY_EXISTS
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        loc = os.path.join(warehouse.removeprefix("file:"), table)
-        if os.path.exists(loc):
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)
+        delete(spark, os.path.join(warehouse, table))
         (
             df.write.mode("overwrite")
             .format("parquet")
@@ -196,7 +195,7 @@ class NearDupPipeline:
         rows = out.count()
         if self._stage_dir(name):
             self._write_manifest(
-                name, rows=rows, table=table, buckets=n_buckets, seconds=time.time() - t0
+                spark, name, rows=rows, table=table, buckets=n_buckets, seconds=time.time() - t0
             )
         self.metrics.append(
             StageMetrics(name, rows, time.time() - t0, False, out.rdd.getNumPartitions())

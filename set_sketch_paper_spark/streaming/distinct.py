@@ -22,53 +22,28 @@ with one DuckDB query.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.blocks import materialize, release
+from ..functions.store_fs import check_or_write_manifest, delete, list_batch_dirs
 from ..operators.kmv import kmv_distinct, kmv_merge_col, with_kmv_estimate
-from .stream_dedup import (
-    _fs_read_text,
-    _fs_write_text,
-    _list_batch_dirs,
-)
-
-_MANIFEST = "_KMV_STORE_MANIFEST.json"
-
-
-def _manifest_path(store_path: str) -> str:
-    return os.path.join(store_path, _MANIFEST)
 
 
 def check_or_write_kmv_manifest(
-    store_path: str, keys, value_col: str, k: int, spark=None
+    store_path: str, keys, value_col: str, k: int, spark
 ) -> None:
     """Refuse mixed-parameter appends: merging states built with different
     (k, value_col, keys) silently corrupts estimates, so the first writer
     pins the config and every later writer must match exactly."""
     keys = [keys] if isinstance(keys, str) else list(keys)
-    cfg = {"kind": "kmv_distinct", "k": k, "value_col": value_col, "keys": keys}
-    path = _manifest_path(store_path)
-    existing = _fs_read_text(spark, path) if spark is not None else (
-        open(path).read() if os.path.exists(path) else None
+    check_or_write_manifest(
+        spark,
+        os.path.join(store_path, "_KMV_STORE_MANIFEST.json"),
+        {"kind": "kmv_distinct", "k": k, "value_col": value_col, "keys": keys},
+        f"KMV store at {store_path}",
     )
-    if existing is None:
-        text = json.dumps(cfg, sort_keys=True)
-        if spark is not None:
-            _fs_write_text(spark, path, text)
-        else:
-            os.makedirs(store_path, exist_ok=True)
-            with open(path, "w") as f:
-                f.write(text)
-        return
-    found = json.loads(existing)
-    if found != cfg:
-        raise ValueError(
-            f"KMV store at {store_path} was built with {found}; refusing "
-            f"append with {cfg}"
-        )
 
 
 def foreach_batch_kmv_distinct(
@@ -89,7 +64,7 @@ def foreach_batch_kmv_distinct(
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        check_or_write_kmv_manifest(store_path, keys, value_col, k, spark=spark)
+        check_or_write_kmv_manifest(store_path, keys, value_col, k, spark)
         sk = kmv_distinct(batch_df, keys, value_col, k=k, flush_keys=flush_keys)
         sk.write.mode("overwrite").parquet(
             os.path.join(store_path, f"batch_id={batch_id}")
@@ -102,7 +77,7 @@ def read_kmv_store(spark, store_path: str, keys, k: int) -> DataFrame | None:
     """All batch partitions merged to one state per key (ONE groupBy over
     <=k-element arrays), or None when the store is empty."""
     keys = [keys] if isinstance(keys, str) else list(keys)
-    parts = _list_batch_dirs(store_path, spark=spark)
+    parts = list_batch_dirs(spark, store_path)
     if not parts:
         return None
     df = spark.read.option("basePath", store_path).parquet(
@@ -139,13 +114,7 @@ def compact_kmv_store(spark, store_path: str, keys, k: int) -> int:
         )
     finally:
         release(spark, held)
-    from .stream_dedup import _hadoop_fs
-
-    removed = 0
-    for part in _list_batch_dirs(store_path, spark=spark):
-        if part == "batch_id=0":
-            continue
-        fs, p = _hadoop_fs(spark, os.path.join(store_path, part))
-        fs.delete(p, True)
-        removed += 1
-    return removed
+    stale = list_batch_dirs(spark, store_path, exclude_batch_id=0)
+    for part in stale:
+        delete(spark, os.path.join(store_path, part))
+    return len(stale)

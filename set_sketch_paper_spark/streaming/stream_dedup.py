@@ -16,22 +16,20 @@ between the two can only under-emit for the replayed batch (which the replay
 then re-emits) — never durably emit pairs for signatures the store lost.
 
 Store-path inspection (manifest IO, partition listing) goes through the
-Hadoop FileSystem API via ``spark._jvm`` whenever a session is available —
-scheme-agnostic (file://, hdfs://, s3a://, ...), no extra library; the
-driver-local ``os.*`` implementations remain as the no-session fallback
-(and are what a spark-less unit test exercises).  The dataframe
-reads/writes themselves were always path-scheme agnostic.
+Hadoop FileSystem of the session (``functions/store_fs.py``), so any path
+scheme works (file://, hdfs://, s3a://, ...); the dataframe reads and
+writes themselves were always path-scheme agnostic.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
 from ..functions.blocks import materialize, release
+from ..functions.store_fs import check_or_write_manifest, list_batch_dirs
 from ..operators import lsh as lsh_ops
 from ..operators.signatures import with_content_sha, with_minhash_signature
 
@@ -54,43 +52,7 @@ def stream_exact_dedup(
     )
 
 
-def _store_manifest_path(store_path: str) -> str:
-    return os.path.join(store_path, "_STORE_MANIFEST.json")
-
-
-def _hadoop_fs(spark, path: str):
-    """(FileSystem, Path) for ``path`` through the session's JVM — resolves
-    the scheme's filesystem (LocalFileSystem for bare/file:// paths, s3a/
-    hdfs/... on clusters) with the session's Hadoop configuration."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
-def _fs_read_text(spark, path: str):
-    """File contents as str, or None if absent — Hadoop FS, any scheme."""
-    fs, p = _hadoop_fs(spark, path)
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-
-
-def _fs_write_text(spark, path: str, text: str) -> None:
-    fs, p = _hadoop_fs(spark, path)
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def check_or_write_store_manifest(
-    store_path: str, pcfg: PipelineConfig, spark=None
-) -> None:
+def check_or_write_store_manifest(store_path: str, pcfg: PipelineConfig, spark) -> None:
     """Refuse to mix signature states produced under different configs.
 
     The on-wire signature layout (binary vs array) and the band semantics
@@ -100,61 +62,13 @@ def check_or_write_store_manifest(
     precondition ``assert(config == other.getConfig())`` (sketch.hpp:1021).
     The on-disk layout version is checked too — stores written by the old
     flat-append layout are refused rather than silently misread.
-
-    With ``spark``, manifest IO runs through the Hadoop FS API (any path
-    scheme); without, through driver-local files (local-path fallback).
     """
-    mp = _store_manifest_path(store_path)
-    if spark is not None:
-        text = _fs_read_text(spark, mp)
-        manifest = json.loads(text) if text is not None else None
-    elif os.path.exists(mp):
-        with open(mp) as f:
-            manifest = json.load(f)
-    else:
-        manifest = None
-    if manifest is not None:
-        if manifest.get("config_hash") != pcfg.config_hash():
-            raise ValueError(
-                f"signature store {store_path} was written with config "
-                f"{manifest.get('config_hash')}, refusing to append with "
-                f"{pcfg.config_hash()}"
-            )
-        if manifest.get("format") != STORE_FORMAT:
-            raise ValueError(
-                f"signature store {store_path} has layout "
-                f"{manifest.get('format')!r}, this build writes "
-                f"{STORE_FORMAT!r} — migrate or start a fresh store"
-            )
-        return
-    body = json.dumps({"config_hash": pcfg.config_hash(), "format": STORE_FORMAT})
-    if spark is not None:
-        fs, p = _hadoop_fs(spark, store_path)
-        fs.mkdirs(p)
-        _fs_write_text(spark, mp, body)
-    else:
-        os.makedirs(store_path, exist_ok=True)
-        with open(mp, "w") as f:
-            f.write(body)
-
-
-def _list_batch_dirs(store_path: str, exclude_batch_id=None, spark=None) -> list[str]:
-    if spark is not None:
-        fs, p = _hadoop_fs(spark, store_path)
-        if not fs.exists(p):
-            return []
-        parts = [
-            st.getPath().getName()
-            for st in fs.listStatus(p)
-            if st.getPath().getName().startswith("batch_id=")
-        ]
-    elif os.path.isdir(store_path):
-        parts = [p for p in os.listdir(store_path) if p.startswith("batch_id=")]
-    else:
-        return []
-    if exclude_batch_id is not None:
-        parts = [p for p in parts if p != f"batch_id={exclude_batch_id}"]
-    return sorted(parts)
+    check_or_write_manifest(
+        spark,
+        os.path.join(store_path, "_STORE_MANIFEST.json"),
+        {"config_hash": pcfg.config_hash(), "format": STORE_FORMAT},
+        f"signature store {store_path}",
+    )
 
 
 def read_signature_store(spark, store_path: str, exclude_batch_id=None, schema=None):
@@ -164,7 +78,7 @@ def read_signature_store(spark, store_path: str, exclude_batch_id=None, schema=N
     exist and must not feed its own candidate join.  ``schema`` (the signed
     frame's, which the store was written from) skips parquet schema
     inference, a Spark job of its own on every read."""
-    parts = _list_batch_dirs(store_path, exclude_batch_id, spark=spark)
+    parts = list_batch_dirs(spark, store_path, exclude_batch_id)
     if not parts:
         return None
     reader = spark.read.option("basePath", store_path)
@@ -236,7 +150,7 @@ def foreach_batch_near_dup(pcfg: PipelineConfig, signature_store_path: str,
 
     def handle(batch_df: DataFrame, batch_id: int):
         spark = batch_df.sparkSession
-        check_or_write_store_manifest(signature_store_path, pcfg, spark=spark)
+        check_or_write_store_manifest(signature_store_path, pcfg, spark)
         signed = (
             with_minhash_signature(batch_df, pcfg, content_col)
             .select(id_col, "sig", "bands", "n_shingles")

@@ -30,11 +30,13 @@ def _pcfg(tmp: str, threshold: float = 0.5) -> PipelineConfig:
     )
 
 
-def test_checkpoint_then_resume(spark, tmp_path):
+def test_checkpoint_then_resume(spark, tmp_path, monkeypatch):
     ckpt = str(tmp_path / "ckpt")
     files = files_table(spark, N_ROWS, seed=42)
 
-    pipe1 = NearDupPipeline(_pcfg(ckpt))
+    # the first run names the dir as a file:// URI: its manifests must land
+    # beside the stage parquet, not under a driver-cwd-relative "file:" dir
+    pipe1 = NearDupPipeline(_pcfg("file://" + ckpt))
     r1 = pipe1.run(files, id_cols=("repo", "path", "commit"))
     clusters1 = sorted((r["file_id"], r["cluster_id"]) for r in r1.clusters.collect())
     assert all(not m.resumed for m in pipe1.metrics)
@@ -49,8 +51,12 @@ def test_checkpoint_then_resume(spark, tmp_path):
         assert man["rows"] == sum(man["partitions"].values())
         assert man["seconds"] >= 0
 
-    # second run with the same config resumes every stage and reproduces the
-    # exact cluster assignment
+    # second run with the same config, from another working directory and
+    # with the plain path, resumes every stage and reproduces the exact
+    # cluster assignment
+    elsewhere = tmp_path / "elsewhere"
+    elsewhere.mkdir()
+    monkeypatch.chdir(elsewhere)
     pipe2 = NearDupPipeline(_pcfg(ckpt))
     r2 = pipe2.run(files, id_cols=("repo", "path", "commit"))
     clusters2 = sorted((r["file_id"], r["cluster_id"]) for r in r2.clusters.collect())

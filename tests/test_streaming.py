@@ -284,7 +284,7 @@ def test_foreach_batch_equals_snapshot_path_on_capped_bucket(spark, tmp_path, mo
     assert list(sc.statusTracker().getJobIdsForGroup("store_read")) == []
 
 
-def test_store_manifest_refuses_config_mismatch(tmp_path):
+def test_store_manifest_refuses_config_mismatch(spark, tmp_path):
     import dataclasses
 
     import pytest as _pytest
@@ -294,11 +294,11 @@ def test_store_manifest_refuses_config_mismatch(tmp_path):
     )
 
     store = str(tmp_path / "mstore")
-    check_or_write_store_manifest(store, PCFG)
-    check_or_write_store_manifest(store, PCFG)  # same config: fine
+    check_or_write_store_manifest(store, PCFG, spark)
+    check_or_write_store_manifest(store, PCFG, spark)  # same config: fine
     other = dataclasses.replace(PCFG, jaccard_threshold=0.9)
     with _pytest.raises(ValueError, match="refusing to append"):
-        check_or_write_store_manifest(store, other)
+        check_or_write_store_manifest(store, other, spark)
 
 
 def test_windowed_agg_with_watermark(spark, tmp_path):
@@ -469,7 +469,7 @@ def test_foreach_batch_reingested_ids_not_duplicated(spark, tmp_path):
     assert all(i1 in new_ids or i2 in new_ids for i1, i2 in pairs_by_batch[1])
 
 
-def test_store_manifest_refuses_old_layout(tmp_path):
+def test_store_manifest_refuses_old_layout(spark, tmp_path):
     import json as _json
 
     import pytest as _pytest
@@ -484,38 +484,37 @@ def test_store_manifest_refuses_old_layout(tmp_path):
         _json.dump({"config_hash": PCFG.config_hash(),
                     "format": "sig:binary,bands:strided"}, f)
     with _pytest.raises(ValueError, match="layout"):
-        check_or_write_store_manifest(store, PCFG)
+        check_or_write_store_manifest(store, PCFG, spark)
 
 
 def test_store_manifest_hadoop_fs_path(spark, tmp_path):
-    """Manifest IO and partition listing through the Hadoop FileSystem API
-    (spark._jvm) — the scheme-agnostic path used whenever a session exists —
-    must interoperate exactly with the driver-local os.* fallback on a
-    local store: write via Hadoop FS, read via both; refusal semantics
-    identical; listings identical."""
+    """Manifest IO and partition listing go through the Hadoop FileSystem
+    API (spark._jvm), so a bare path and its file:// URI name the same
+    store: refusal, listing and exclude_batch_id agree on both forms."""
     import dataclasses
 
     import pytest as _pytest
 
+    from set_sketch_paper_spark.functions.store_fs import list_batch_dirs
     from set_sketch_paper_spark.streaming.stream_dedup import (
-        _list_batch_dirs,
         check_or_write_store_manifest,
     )
 
     store = str(tmp_path / "hfsstore")
-    check_or_write_store_manifest(store, PCFG, spark=spark)   # Hadoop FS write
-    check_or_write_store_manifest(store, PCFG, spark=spark)   # re-check: fine
-    check_or_write_store_manifest(store, PCFG)                # os.* read: fine
+    uri = "file://" + store
+    check_or_write_store_manifest(uri, PCFG, spark)     # Hadoop FS write
+    assert os.path.exists(os.path.join(store, "_STORE_MANIFEST.json"))
+    check_or_write_store_manifest(store, PCFG, spark)   # re-check: fine
     other = dataclasses.replace(PCFG, jaccard_threshold=0.9)
-    with _pytest.raises(ValueError, match="refusing"):
-        check_or_write_store_manifest(store, other, spark=spark)
-    with _pytest.raises(ValueError, match="refusing"):
-        check_or_write_store_manifest(store, other)
+    for path in (store, uri):
+        with _pytest.raises(ValueError, match="refusing"):
+            check_or_write_store_manifest(path, other, spark)
 
     os.makedirs(os.path.join(store, "batch_id=0"))
     os.makedirs(os.path.join(store, "batch_id=3"))
-    assert _list_batch_dirs(store, spark=spark) == _list_batch_dirs(store)
-    assert _list_batch_dirs(store, exclude_batch_id=3, spark=spark) == ["batch_id=0"]
+    for path in (store, uri):
+        assert list_batch_dirs(spark, path) == ["batch_id=0", "batch_id=3"]
+        assert list_batch_dirs(spark, path, exclude_batch_id=3) == ["batch_id=0"]
 
 
 def test_kmv_store_merge_replay_and_compaction(spark, tmp_path):
