@@ -62,6 +62,7 @@ def main(argv=None) -> None:
         PipelineConfig,
         ShingleConfig,
     )
+    from set_sketch_paper_spark.functions.session import CODEGEN_CACHE_ENTRIES
     from set_sketch_paper_spark.plans.pipeline import NearDupPipeline
     from set_sketch_paper_spark.sources.synthetic import files_table
 
@@ -73,6 +74,7 @@ def main(argv=None) -> None:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
 

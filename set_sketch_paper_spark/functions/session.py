@@ -12,6 +12,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Janino-compiled class cache (spark.sql.codegen.cache.maxEntries, default
+# 100).  One NearDupPipeline op compiles ~85 classes cold, so at 100 entries
+# the LRU evicts its own classes: on the perfbench batch_dedup corpus every
+# warm op recompiled 19 of them; at 2000 a warm op compiles 0.
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def get_spark(
     app_name: str = "set-sketch-paper-spark",
@@ -39,6 +45,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,9 +1,16 @@
-"""Vectorized pandas/Arrow UDFs wrapping the numpy sketch kernels.
+"""Vectorized Arrow UDFs wrapping the numpy sketch kernels.
 
 Per BASELINE.json input_hint: no per-row Python UDFs anywhere — every UDF
-here is Arrow-batched (pandas_udf / applyInPandas), and all per-batch work is
-numpy on flat (values, offsets) arrays.  Content-level hashing that Spark can
-do JVM-side (sha2, xxhash64) is NOT done here — see operators/.
+here is Arrow-batched, and all per-batch work is numpy on flat
+(values, offsets) arrays.  Content-level hashing that Spark can do JVM-side
+(sha2, xxhash64) is NOT done here — see operators/.
+
+The MinHash signature UDF, the flagship's hot path, is an ``arrow_udf``: it
+hands the batch's content ``pa.Array`` to the Arrow tokenizer and builds its
+result struct from numpy buffers, with no pandas and no per-row objects.
+The other UDFs are ``pandas_udf``s.  ``pyarrow`` is imported at module level
+because ``arrow_udf`` resolves the ``pa.Array`` type hints (strings, under
+``from __future__ import annotations``) in this module's globals.
 
 Signature UDFs return a struct column so one pass over the content produces
 signature + LSH band hashes + shingle count together (tokenization is the
@@ -14,7 +21,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -44,33 +53,48 @@ SIGNATURE_STRUCT = StructType(
         StructField("n_shingles", IntegerType(), False),
     ]
 )
+# the exact Arrow type Spark expects back (non-null fields, list<element>),
+# so the worker never casts the result
+_SIGNATURE_ARROW = to_arrow_type(SIGNATURE_STRUCT)
 
 
 def make_minhash_signature_udf(pcfg: PipelineConfig):
     """content:string -> struct(sig binary, bands array<long>, n_shingles int).
 
-    ``sig`` is the little-endian uint64 register buffer as ONE binary blob:
-    a 128-register signature as array<long> costs a 128-slot Arrow ListArray
-    per row (per-element conversion dominated the signature stage at 240k
-    rows); as BinaryType it is a single buffer memcpy.  ``bands`` stays
-    array<long> (short, and posexplode needs an array JVM-side).
+    An Arrow UDF end to end: the content column reaches the tokenizer as
+    the batch's ``pa.Array`` and the struct is assembled from numpy buffers,
+    so no per-row Python object is made on either side of the boundary.
+
+    ``sig`` is the little-endian uint64 register buffer as ONE binary blob
+    per row: the (rows, m) matrix buffer with fixed-stride offsets.  As
+    array<long> a 128-register signature costs a 128-slot list per row.
+    ``bands`` stays array<long> (short, and posexplode needs an array
+    JVM-side): one ListArray over the flat (rows, bands) matrix.
     """
     sh, mh, lsh = pcfg.shingle, pcfg.minhash, pcfg.lsh
 
-    @F.pandas_udf(SIGNATURE_STRUCT)
-    def _udf(content: pd.Series) -> pd.DataFrame:
+    @F.arrow_udf(SIGNATURE_STRUCT)
+    def _udf(content: pa.Array) -> pa.Array:
         values, offsets = shingle_sets_batch(
-            content.tolist(), sh.k, sh.token_pattern, sh.lowercase, sh.seed
+            content, sh.k, sh.token_pattern, sh.lowercase, sh.seed
         )
         sigs, sizes = minhash_batch(values, offsets, mh.num_registers, mh.seed, mh.algo)
         bands = band_hashes(sigs, lsh.num_bands, lsh.rows_per_band, lsh.seed)
-        bands_i64 = u64_to_i64(bands)
-        return pd.DataFrame(
-            {
-                "sig": [row.tobytes() for row in sigs],
-                "bands": list(bands_i64),
-                "n_shingles": sizes.astype(np.int32),
-            }
+        n = len(sizes)
+        sig = pa.Array.from_buffers(
+            pa.binary(), n,
+            [None,
+             pa.py_buffer(np.arange(n + 1, dtype=np.int32) * np.int32(8 * mh.num_registers)),
+             pa.py_buffer(np.ascontiguousarray(sigs))],
+        )
+        band_list = pa.ListArray.from_arrays(
+            pa.array(np.arange(n + 1, dtype=np.int32) * np.int32(lsh.num_bands)),
+            pa.array(u64_to_i64(bands).ravel()),
+            type=_SIGNATURE_ARROW.field("bands").type,
+        )
+        return pa.StructArray.from_arrays(
+            [sig, band_list, pa.array(sizes.astype(np.int32))],
+            fields=list(_SIGNATURE_ARROW),
         )
 
     return _udf

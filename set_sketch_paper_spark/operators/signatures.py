@@ -51,6 +51,11 @@ def with_minhash_signature(
     n_shingles:int.  Narrow inputs are widened first — the signature UDF is
     the expensive per-row stage and must not serialize behind a 1-row-group
     scan."""
+    if "_sig_struct" in df.columns:
+        raise ValueError(
+            "with_minhash_signature input has a column named '_sig_struct', "
+            "which clashes with its internal struct column; rename it first"
+        )
     udf = make_minhash_signature_udf(pcfg)
     return (
         widen_if_narrow(df).withColumn("_sig_struct", udf(F.col(content_col)))

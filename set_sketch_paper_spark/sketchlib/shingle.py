@@ -2,16 +2,20 @@
 
 The reference consumes pre-hashed uint64 elements (sketch.hpp:1040, 1585);
 this module is our pipeline's element producer: content string -> set of
-64-bit shingle hashes.  All heavy lifting is numpy; only the regex token
-split is per-string Python (it runs inside Arrow-batched UDFs).
+64-bit shingle hashes.  The batch kernels split and intern tokens in Arrow
+(default ``\\S+`` pattern; other patterns use a per-string regex findall)
+and do everything else in numpy.
 """
 
 from __future__ import annotations
 
 import re
 from functools import lru_cache
+from itertools import chain
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from .hashing import U64, splitmix64, _MIX1  # noqa: F401
 
@@ -143,21 +147,45 @@ def positional_kgram_hashes(
 
 
 def _token_hashes_flat(texts, pattern, lowercase, seed):
-    """Tokenize + hash a batch: flat token-hash array, token offsets, lens."""
-    import pandas as pd
-    from itertools import chain
+    """Tokenize + hash a batch: flat token-hash array, token offsets, lens.
 
+    ``texts`` is a list of str/None or a pyarrow string array.  The ``\\S+``
+    pattern splits in Arrow: ``utf8_split_whitespace`` equals ``str.split()``
+    on every codepoint once the empty tokens it emits for leading/trailing
+    whitespace are dropped.  Lowercasing stays in Python (``pc.utf8_lower``
+    differs from ``str.lower`` on U+0130).  Other patterns use ``findall``.
+    """
     n_docs = len(texts)
-    tok_lists = [tokenize(t or "", pattern, lowercase) for t in texts]
-    lens = np.fromiter((len(t) for t in tok_lists), dtype=np.int64, count=n_docs)
-    total = int(lens.sum())
+    if pattern == r"\S+":
+        if lowercase:
+            if isinstance(texts, pa.Array):
+                texts = texts.to_pylist()
+            texts = [t.lower() if t else t for t in texts]
+        if not isinstance(texts, pa.Array):
+            texts = pa.array(texts, type=pa.string())
+        split = pc.utf8_split_whitespace(texts)
+        flat = pc.list_flatten(split)
+        nonempty = pc.not_equal(pc.binary_length(flat), 0)
+        flat = flat.filter(nonempty)
+        parents = pc.list_parent_indices(split).filter(nonempty).to_numpy()
+        lens = np.bincount(parents, minlength=n_docs)
+        enc = pc.dictionary_encode(flat)
+        codes = enc.indices.to_numpy()
+        uniques = enc.dictionary.to_pylist()
+    else:
+        import pandas as pd
+
+        if isinstance(texts, pa.Array):
+            texts = texts.to_pylist()
+        tok_lists = [tokenize(t or "", pattern, lowercase) for t in texts]
+        lens = np.fromiter((len(t) for t in tok_lists), dtype=np.int64, count=n_docs)
+        flat_tokens = np.empty(int(lens.sum()), dtype=object)
+        flat_tokens[:] = list(chain.from_iterable(tok_lists))
+        codes, uniques = pd.factorize(flat_tokens)
     tok_off = np.zeros(n_docs + 1, dtype=np.int64)
     np.cumsum(lens, out=tok_off[1:])
-    if total == 0:
+    if len(codes) == 0:
         return np.empty(0, dtype=U64), tok_off, lens
-    flat_tokens = np.empty(total, dtype=object)
-    flat_tokens[:] = list(chain.from_iterable(tok_lists))
-    codes, uniques = pd.factorize(flat_tokens)
     distinct = np.fromiter((_fnv1a(t) for t in uniques), dtype=U64, count=len(uniques))
     salt = U64((seed * int(_MIX1)) & 0xFFFFFFFFFFFFFFFF)
     th_flat = splitmix64(distinct ^ salt)[codes]
@@ -174,12 +202,18 @@ def shingle_sets_batch(
     i.  The flat layout feeds np.minimum.reduceat-style batched sketch
     kernels without per-row object overhead.
 
-    Hot-path design (this runs inside every signature UDF batch): the only
-    per-token Python is the regex findall; token interning is ONE
-    pandas.factorize over the whole batch (C speed), the byte-level FNV hash
-    runs once per *distinct token per batch* (not per occurrence), and the
-    k-gram rolling combine + per-row dedup are flat numpy passes with
-    row-boundary masking — no per-document Python loop.
+    ``texts`` is a list of str/None or a pyarrow string array (the signature
+    UDF passes its Arrow column as is).
+
+    Hot-path design (this runs inside every signature UDF batch): for the
+    default ``\\S+`` pattern the token split and the token interning are
+    Arrow kernels over the whole batch (``utf8_split_whitespace``, one
+    ``dictionary_encode``), so no per-token Python runs; the byte-level FNV
+    hash runs once per *distinct token per batch* (not per occurrence); the
+    k-gram rolling combine is a flat numpy pass with row-boundary masking.
+    Each row's candidates are contiguous, so the dedup is an in-place
+    ``np.sort`` per row segment plus one flat repeat mask, with no global
+    sort over (row, value).
     """
     n_docs = len(texts)
     offsets = np.zeros(n_docs + 1, dtype=np.int64)
@@ -189,12 +223,19 @@ def shingle_sets_batch(
     total = len(th_flat)
     if total == 0:
         return np.empty(0, dtype=U64), offsets
-    row_of_tok = np.repeat(np.arange(n_docs, dtype=np.int64), lens)
+    # per-row distinct-shingle candidates, laid out row-contiguously: a
+    # row with len >= k owns its len-k+1 windows, a short row (0 < len < k)
+    # one slot
+    long_ = lens >= k
+    short = np.flatnonzero((lens > 0) & ~long_)
+    seg_sizes = np.where(long_, lens - k + 1, 0)
+    seg_sizes[short] = 1
+    seg_off = np.zeros(n_docs + 1, dtype=np.int64)
+    np.cumsum(seg_sizes, out=seg_off[1:])
+    vals = np.empty(int(seg_off[-1]), dtype=U64)
 
-    row_parts: list[np.ndarray] = []  # (row_id, value) pair sources
-    val_parts: list[np.ndarray] = []
-
-    # full-width windows: position p valid iff tokens p..p+k-1 share a row
+    # full-width windows: position p valid iff tokens p..p+k-1 share a row;
+    # the valid ones are already in row order
     if total >= k:
         nwin = total - k + 1
         s = th_flat[:nwin].copy()
@@ -202,14 +243,16 @@ def shingle_sets_batch(
             s = splitmix64(s ^ _TOKEN_SALT)
             s ^= th_flat[j : nwin + j]
         s = splitmix64(s)
+        row_of_tok = np.repeat(np.arange(n_docs, dtype=np.int64), lens)
         valid = row_of_tok[:nwin] == row_of_tok[k - 1 :]
-        # only rows with len >= k use windows (len<k rows get the fold below)
-        row_parts.append(row_of_tok[:nwin][valid])
-        val_parts.append(s[valid])
+        win = s[valid]
+    else:
+        win = np.empty(0, dtype=U64)
 
-    # short rows (0 < len < k): one shingle folding all tokens, same math as
+    # short rows: one shingle folding all tokens, same math as
     # shingle_hashes with k'=len
-    short = np.flatnonzero((lens > 0) & (lens < k))
+    is_short = np.zeros(len(vals), dtype=bool)
+    is_short[seg_off[short]] = True
     if len(short):
         max_len = int(lens[short].max())
         sv = th_flat[tok_off[short]].copy()
@@ -217,20 +260,16 @@ def shingle_sets_batch(
             live = lens[short] > j
             idx = tok_off[short[live]] + j
             sv[live] = splitmix64(sv[live] ^ _TOKEN_SALT) ^ th_flat[idx]
-        row_parts.append(short)
-        val_parts.append(splitmix64(sv))
+        vals[is_short] = splitmix64(sv)
+    vals[~is_short] = win
 
-    rows_all = np.concatenate(row_parts) if row_parts else np.empty(0, np.int64)
-    vals_all = np.concatenate(val_parts) if val_parts else np.empty(0, U64)
-    if len(vals_all) == 0:
-        return np.empty(0, dtype=U64), offsets
-    order = np.lexsort((vals_all, rows_all))
-    rv = rows_all[order]
-    vv = vals_all[order]
-    keep = np.ones(len(vv), dtype=bool)
-    keep[1:] = (rv[1:] != rv[:-1]) | (vv[1:] != vv[:-1])
-    rv = rv[keep]
-    values = vv[keep]
-    counts = np.bincount(rv, minlength=n_docs)
-    np.cumsum(counts, out=offsets[1:])
+    # per-row sort in place (rows are contiguous), then drop repeats
+    for i in np.flatnonzero(seg_sizes > 1):
+        vals[seg_off[i] : seg_off[i + 1]].sort()
+    keep = np.ones(len(vals), dtype=bool)
+    keep[1:] = vals[1:] != vals[:-1]
+    keep[seg_off[:-1][seg_sizes > 0]] = True
+    values = vals[keep]
+    rows = np.repeat(np.arange(n_docs, dtype=np.int64), seg_sizes)
+    np.cumsum(np.bincount(rows[keep], minlength=n_docs), out=offsets[1:])
     return values, offsets

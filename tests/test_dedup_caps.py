@@ -274,3 +274,13 @@ def test_pair_sides_rejects_clashing_columns(spark, col, pair_cols):
     table = spark.createDataFrame([(0, 5)], f"doc_id long, {col} long")
     with pytest.raises(ValueError, match=repr(col)):
         pair_sides(pairs, table, "doc_id", [col])
+
+
+def test_with_minhash_signature_rejects_internal_column_name(spark):
+    """A caller column named like the signature UDF's internal struct column
+    is refused by name instead of being overwritten and then dropped."""
+    from set_sketch_paper_spark.operators.signatures import with_minhash_signature
+
+    df = spark.createDataFrame([(1, "a b c", 7)], "doc_id long, content string, _sig_struct long")
+    with pytest.raises(ValueError, match="_sig_struct"):
+        with_minhash_signature(df, PipelineConfig())

@@ -133,13 +133,32 @@ def test_recall_vs_planted_truth(spark, corpus_pdf):
     assert recall >= 0.99, f"planted-truth recall {recall:.4f} < 0.99 ({hit}/{total})"
 
 
+def _compiles(spark) -> int:
+    """Janino class compiles so far in this JVM (CodegenMetrics)."""
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return cm.METRIC_COMPILATION_TIME().getCount()
+
+
 def test_sha256_invariant(spark):
     pcfg = _pcfg("oph")
     files = files_table(spark, 200, seed=42)
     ok = files.withColumn("src_sha", F.sha2("content", 256))
-    # passes when the column matches
-    NearDupPipeline(pcfg).run(ok, id_cols=("repo", "path", "commit"),
-                              verify_sha_against="src_sha")
+    # passes when the column matches; a repeat of the same run compiles no
+    # class (the codegen cache holds a whole pipeline, functions/session.py).
+    # Compiles are counted JVM-wide and AQE can re-plan a join on slightly
+    # different runtime sizes, so one of two repeats must read 0; at Spark's
+    # default cache of 100 entries every repeat recompiles.
+    repeats = []
+    for _ in range(3):
+        before = _compiles(spark)
+        result = NearDupPipeline(pcfg).run(ok, id_cols=("repo", "path", "commit"),
+                                           verify_sha_against="src_sha")
+        result.clusters.collect()
+        result.release_cache()
+        repeats.append(_compiles(spark) - before)
+        if repeats[1:] and repeats[-1] == 0:
+            break
+    assert 0 in repeats[1:], repeats
     # raises when any row is corrupted
     bad = ok.withColumn(
         "src_sha",

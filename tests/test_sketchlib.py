@@ -164,17 +164,32 @@ def test_shingle_batch_layout():
 # ---------------------------------------------------------------------------
 
 def test_shingle_batch_matches_reference_impl():
+    """The batch kernel (Arrow whitespace split for \\S+) equals the per-row
+    str.split()/findall reference, for list and pyarrow input alike."""
+    import sys
+
+    import pyarrow as pa
+
     from set_sketch_paper_spark.sketchlib.shingle import _shingle_sets_batch_ref
 
+    spaces = [c for c in map(chr, range(sys.maxunicode + 1)) if c.isspace()]
     texts = [
-        "", "one", "one two", "a b c d e f g", "x " * 50,
+        "", None, "one", "one two", "a b c d e f g", "x " * 50,
         "dup dup dup dup", "tok1 tok2 tok3 tok1 tok2 tok3",
-    ] + [f"w{i} w{i+1} w{i+2} w{i+3} w{i+4} w{i+5}" for i in range(40)]
+        "  lead", "trail  ", "  both  ", "a   b\t\tc\n\nd", "   ", "\n",
+        "İstanbul İSTANBUL", "x.y, z!", "Ünïcode wörds, ok?",
+    ] + [f"w{i} w{i+1} w{i+2} w{i+3} w{i+4} w{i+5}" for i in range(40)] + [
+        f"{c}p{c}q{c}{c}r s{c}" for c in spaces
+    ]
     for k in (1, 3, 5, 9):
-        v1, o1 = _shingle_sets_batch_ref(texts, k)
-        v2, o2 = shingle_sets_batch(texts, k)
-        assert np.array_equal(o1, o2), k
-        assert np.array_equal(v1, v2), k
+        for pattern in (r"\S+", r"\w+|[^\w\s]"):
+            for lowercase in (False, True):
+                case = (k, pattern, lowercase)
+                v1, o1 = _shingle_sets_batch_ref(texts, k, pattern, lowercase)
+                for given in (texts, pa.array(texts, type=pa.string())):
+                    v2, o2 = shingle_sets_batch(given, k, pattern, lowercase)
+                    assert np.array_equal(o1, o2), case
+                    assert np.array_equal(v1, v2), case
 
 
 def test_oph_properties(rng):
