@@ -289,7 +289,11 @@ def make_minhash_pair_estimator_udf(mh: MinHashConfig, method: str = "original")
             }
         )
 
-    return _udf
+    # Nondeterministic so the optimizer cannot push a Filter on the estimate
+    # (verified_pairs' threshold) below the projection: for a deterministic
+    # UDF it inlines the call into the Filter, and every candidate crosses
+    # the Python boundary twice, once for the Filter and once for the output
+    return _udf.asNondeterministic()
 
 
 BOUNDS_STRUCT = StructType(

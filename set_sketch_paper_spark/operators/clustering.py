@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.blocks import materialize, release
+from ..functions.blocks import materialize, release, sever_plan_identity
 
 # edge sets up to this size take the single-task union-find path
 SMALL_GRAPH_EDGES = 1_000_000
@@ -36,31 +36,6 @@ def _symmetric(edges: DataFrame) -> DataFrame:
     return edges.select("id1", "id2").union(
         edges.select(F.col("id2").alias("id1"), F.col("id1").alias("id2"))
     )
-
-
-def _sever_plan_identity(df: DataFrame) -> DataFrame:
-    """Rebuild the Dataset from its (already checkpointed) InternalRow RDD.
-
-    Long iterative chains of self-joins-on-checkpointed-frames degrade
-    SUPER-LINEARLY after ~15 rounds in one session even though the logical
-    plan, RDD lineage depth, partition count, and row count all stay
-    constant — the cost sits in driver-side Dataset bookkeeping carried
-    across self-join generations (measured: ~2.2x per round from round ~15;
-    a 25-round loop goes from 0.4s to 240s per round).  Re-wrapping the
-    checkpointed RDD[InternalRow] in a fresh Dataset severs that identity
-    chain entirely JVM-side — zero Python data movement — and keeps every
-    round at constant cost (validated by the multi-round graphs in
-    tests/test_clustering_star.py).  Falls back to the unmodified frame if
-    the package-private hook is unavailable in a future Spark."""
-    try:
-        jdf = df._jdf
-        spark = df.sparkSession
-        new_jdf = spark._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False
-        )
-        return DataFrame(new_jdf, spark)
-    except Exception:  # pragma: no cover - depends on Spark internals
-        return df
 
 
 def _unionfind_partition(pdf):
@@ -96,7 +71,9 @@ def _unionfind_partition(pdf):
     return pd.DataFrame({"id": verts, "cluster_id": [find(v) for v in verts]})
 
 
-def connected_components(edges: DataFrame, reliable: bool = False) -> DataFrame:
+def connected_components(
+    edges: DataFrame, reliable: bool = False, n_edges: int | None = None
+) -> DataFrame:
     """(id1, id2) undirected edges -> (id, cluster_id = min reachable id).
 
     Includes every vertex that appears in the edge list (callers union in
@@ -114,10 +91,16 @@ def connected_components(edges: DataFrame, reliable: bool = False) -> DataFrame:
     no canonicalizing dedup shuffle or localCheckpoint is needed.  Labels
     are identical (union-by-min root == min-label fixed point; asserted
     against the loop in tests/test_clustering_star.py).  Beyond the
-    threshold the large-star/small-star loop runs.  The decision count is
-    one aggregate-only pass over the edge subtree (no shuffle, no
-    materialization); callers whose edge lineage is expensive to recompute
-    should checkpoint it first (the pipeline's inputs already are).
+    threshold the large-star/small-star loop runs.
+
+    ``n_edges`` is an edge count, or an upper bound on it, that the caller
+    already holds (the pipeline observes its stages' row counts as they
+    materialize).  A bound at or below the threshold takes the fast path
+    with no job; without one, or above the threshold, the decision counts
+    the edges exactly, in one aggregate-only pass over the edge subtree (no
+    shuffle, no materialization), so the path chosen never depends on how
+    loose the bound is.  Callers whose edge lineage is expensive to
+    recompute should checkpoint it first.
 
     ``reliable=True`` materializes the loop's rounds with reliable RDD
     checkpoints to the session's checkpoint dir instead of localCheckpoint:
@@ -125,7 +108,9 @@ def connected_components(edges: DataFrame, reliable: bool = False) -> DataFrame:
     truncated lineage cannot be replayed.
     """
     e2 = edges.select("id1", "id2")
-    if e2.count() <= SMALL_GRAPH_EDGES:
+    if n_edges is None or n_edges > SMALL_GRAPH_EDGES:
+        n_edges = e2.count()
+    if n_edges <= SMALL_GRAPH_EDGES:
         return (
             e2.withColumn("_g", F.lit(0))
             .groupBy("_g")
@@ -163,7 +148,7 @@ def _star_components(edges: DataFrame, reliable: bool = False) -> DataFrame:
 
     def checkpoint(df: DataFrame, held: set[int]) -> DataFrame:
         # sever after the id is read: the severed frame wraps another RDD
-        return _sever_plan_identity(materialize(df, held, reliable=reliable))
+        return sever_plan_identity(materialize(df, held, reliable=reliable))
 
     # pinned: read by every round; prev: the previous round's block
     pinned: set[int] = set()

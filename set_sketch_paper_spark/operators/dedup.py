@@ -233,7 +233,7 @@ def ngram_jaccard_pairs(
     """
     from ..operators.signatures import widen_if_narrow
 
-    toks = widen_if_narrow(df).select(
+    toks = widen_if_narrow(df.select(id_col, text_col)).select(
         F.col(id_col).alias("_id"), F.split(F.col(text_col), " ").alias("t")
     )
     # flat gram construction: explode the POSITION sequence and hash one
@@ -424,7 +424,7 @@ def winnow_substring_pairs(
 
     shingle_cfg = shingle_cfg or ShingleConfig(k=8)
     udf = make_winnow_fingerprint_udf(shingle_cfg, window=window)
-    fp = widen_if_narrow(df).select(
+    fp = widen_if_narrow(df.select(id_col, text_col)).select(
         F.col(id_col).alias("_id"), F.explode(udf(F.col(text_col))).alias("g")
     )
     inter = shared_key_pair_counts(fp, fp_cap, min_shared)
@@ -455,7 +455,7 @@ def simhash_near_dup_pairs(
     from ..functions.textstats_udfs import make_simhash_udf
     from ..operators.signatures import widen_if_narrow
 
-    sim = widen_if_narrow(df).select(
+    sim = widen_if_narrow(df.select(id_col, text_col)).select(
         F.col(id_col).alias("_id"),
         make_simhash_udf(pcfg.shingle)(F.col(text_col)).alias("simhash"),
     )
@@ -561,7 +561,7 @@ def lcs_substring_pairs(
     min_run = min_len - L + 1
     if min_run < 1:
         raise ValueError(f"min_len ({min_len}) must be >= L ({L})")
-    t = widen_if_narrow(df).select(
+    t = widen_if_narrow(df.select(id_col, text_col)).select(
         F.col(id_col).alias("_id"), F.col(text_col).alias("_t")
     ).filter(F.length("_t") >= L)
 

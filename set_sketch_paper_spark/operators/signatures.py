@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import GHLLConfig, PipelineConfig, SetSketchConfig
+from ..functions.blocks import sever_plan_identity
 from ..functions.udfs import make_minhash_signature_udf, make_register_sketch_udf
 
 
@@ -23,12 +24,22 @@ def widen_if_narrow(df: DataFrame) -> DataFrame:
     cluster scale spark.sql.files.maxPartitionBytes keeps scans wide and
     this is a no-op; the guard only pays its small shuffle when the input
     would otherwise underuse the executors.
+
+    Sizing runs no job of its own.  A plan without shuffles (a scan, a
+    cached frame) knows its partition count before it runs and comes back
+    as it is.  An adaptive plan knows it only once its shuffle stages have
+    run: it is sized from one execution, and the frame returned (widened or
+    not) reads that same execution, so the caller's action reuses its
+    shuffle outputs and broadcasts instead of running them again.  Such a
+    frame carries every column of ``df``: project before widening.
     """
     if df.isStreaming:  # micro-batch sizing is the stream's own concern
         return df
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
+    par = df.sparkSession.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution()
+    if plan.executedPlan().nodeName() == "AdaptiveSparkPlan":
+        df = sever_plan_identity(df)
+    if plan.toRdd().getNumPartitions() < par:
         return df.repartition(par)
     return df
 

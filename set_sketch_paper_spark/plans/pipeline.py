@@ -30,7 +30,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..config import PipelineConfig
 from ..functions.blocks import materialize, persistent_rdd_ids, release
@@ -44,7 +44,7 @@ from ..operators.signatures import with_content_sha, with_file_id, with_minhash_
 @dataclass
 class StageMetrics:
     name: str
-    rows: int
+    rows: int  # -1 only for a stage that is neither materialized nor resumed
     seconds: float
     resumed: bool
     num_partitions: int
@@ -110,9 +110,14 @@ class NearDupPipeline:
         })
 
     def _try_resume(self, spark: SparkSession, stage: str) -> DataFrame | None:
-        if self._read_manifest(spark, stage) is None:
+        manifest = self._read_manifest(spark, stage)
+        if manifest is None:
             return None
-        return spark.read.parquet(self._stage_dir(stage))
+        out = spark.read.parquet(self._stage_dir(stage))
+        self.metrics.append(
+            StageMetrics(stage, manifest["rows"], 0.0, True, out.rdd.getNumPartitions())
+        )
+        return out.drop("_stage", "_config_hash", "_run_id")
 
     def _checkpoint(self, df: DataFrame, stage: str, t0: float) -> DataFrame:
         """Persist stage output + manifest; returns the materialized frame.
@@ -123,12 +128,13 @@ class NearDupPipeline:
         """
         d = self._stage_dir(stage)
         if not d:
-            out = materialize(df, self._ckpt_rdd_ids)
-            # rows=-1: a separate count() is one extra job per stage, and at
-            # small scale the pipeline is job-overhead-bound; persisted
-            # checkpoints below still record exact per-partition rows
+            # the row count rides on the checkpoint's own job: a separate
+            # count() would be one more job per stage
+            counted = Observation()
+            out = materialize(df.observe(counted, F.count(F.lit(1)).alias("rows")),
+                              self._ckpt_rdd_ids)
             self.metrics.append(
-                StageMetrics(stage, -1, time.time() - t0, False,
+                StageMetrics(stage, counted.get["rows"], time.time() - t0, False,
                              out.rdd.getNumPartitions())
             )
             return out
@@ -171,10 +177,11 @@ class NearDupPipeline:
         other stages still resume from their parquet."""
         table = f"ssp_{name}_{self.pcfg.config_hash()[:12]}"
         t0 = time.time()
-        if self._read_manifest(spark, name) is not None and spark.catalog.tableExists(table):
+        manifest = self._read_manifest(spark, name)
+        if manifest is not None and spark.catalog.tableExists(table):
             out = spark.table(table)
             self.metrics.append(
-                StageMetrics(name, -1, 0.0, True, out.rdd.getNumPartitions())
+                StageMetrics(name, manifest["rows"], 0.0, True, out.rdd.getNumPartitions())
             )
             return out
         df = build()
@@ -205,8 +212,7 @@ class NearDupPipeline:
     def _stage(self, spark: SparkSession, name: str, build, materialize: bool = True) -> DataFrame:
         resumed = self._try_resume(spark, name)
         if resumed is not None:
-            self.metrics.append(StageMetrics(name, -1, 0.0, True, resumed.rdd.getNumPartitions()))
-            return resumed.drop("_stage", "_config_hash", "_run_id")
+            return resumed
         if not materialize and not self._stage_dir(name):
             # in-memory mode only: a stage consumed exactly once downstream
             # needs no checkpoint barrier — materializing it is one extra
@@ -300,8 +306,13 @@ class NearDupPipeline:
             spark.sparkContext.setCheckpointDir(
                 os.path.join(self.pcfg.checkpoint_dir, "_cc_rdd_ckpt")
             )
+        # a bound on the edges from counts already taken: every file that is
+        # not its content's representative gives one exact edge, so there
+        # are fewer exact edges than identity rows
+        n_edges = sum(m.rows for m in self.metrics if m.name in ("identity", "verified_pairs"))
         components = self._stage(
-            spark, "clusters", lambda: connected_components(edges, reliable=reliable_cc)
+            spark, "clusters",
+            lambda: connected_components(edges, reliable=reliable_cc, n_edges=n_edges),
         )
 
         # every file gets an assignment; singletons cluster with themselves

@@ -42,6 +42,10 @@ from set_sketch_paper_spark.sources.synthetic import (
 )
 
 N_ROWS = 2000
+# Spark jobs of a warm test_sha256_invariant run + collect, its sha check's
+# count included.  It was 23 while widen_if_narrow and the clusters stage's
+# fast-path check each ran jobs of their own only to size a decision
+WARM_PIPELINE_JOBS = 17
 
 
 def _pcfg(algo: str) -> PipelineConfig:
@@ -98,6 +102,14 @@ def test_pipeline_matches_oracle_bit_exact(spark, corpus_pdf, algo):
     for fid, cid in o_clusters.items():
         assert got_clusters[fid] == cid, f"{algo}: cluster mismatch for {fid}"
 
+    # the in-memory stages' row counts are observed on their checkpoint
+    # jobs; the clusters stage holds every file in a cluster of >= 2
+    sizes = pd.Series(list(got_clusters.values())).value_counts()
+    rows = {m.name: m.rows for m in result.metrics}
+    assert rows["identity"] == N_ROWS
+    assert rows["verified_pairs"] == len(got_pairs)
+    assert rows["clusters"] == int(sizes[sizes >= 2].sum())
+
 
 def test_recall_vs_planted_truth(spark, corpus_pdf):
     pcfg = _pcfg("oph")
@@ -148,17 +160,27 @@ def test_sha256_invariant(spark):
     # Compiles are counted JVM-wide and AQE can re-plan a join on slightly
     # different runtime sizes, so one of two repeats must read 0; at Spark's
     # default cache of 100 entries every repeat recompiles.
-    repeats = []
-    for _ in range(3):
+    # The same warm run + collect is also pinned at WARM_PIPELINE_JOBS Spark
+    # jobs, the sha check's count included: no job runs only to size a
+    # decision (widen_if_narrow, the clusters fast path) or a metric.
+    sc = spark.sparkContext
+    repeats, jobs = [], []
+    for i in range(3):
         before = _compiles(spark)
-        result = NearDupPipeline(pcfg).run(ok, id_cols=("repo", "path", "commit"),
-                                           verify_sha_against="src_sha")
-        result.clusters.collect()
+        sc.setJobGroup(f"sha256_invariant_{i}", "warm pipeline run")
+        try:
+            result = NearDupPipeline(pcfg).run(ok, id_cols=("repo", "path", "commit"),
+                                               verify_sha_against="src_sha")
+            result.clusters.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
         result.release_cache()
         repeats.append(_compiles(spark) - before)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"sha256_invariant_{i}")))
         if repeats[1:] and repeats[-1] == 0:
             break
     assert 0 in repeats[1:], repeats
+    assert jobs[1] == WARM_PIPELINE_JOBS, jobs
     # raises when any row is corrupted
     bad = ok.withColumn(
         "src_sha",

@@ -10,6 +10,7 @@ rather than a 100x-scale run.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -192,8 +193,19 @@ def test_pair_path_exchange_counts(spark, name):
 
 def test_incremental_near_dup_signs_each_side_once(spark):
     """incremental_near_dup materializes each signed side once: the plan
-    keeps only the verification estimator's 2 ArrowEvalPython nodes.
+    keeps only the verification estimator's 1 ArrowEvalPython node.
     Without the per-side checkpoints the signature UDF is planned once per
-    read of a side (8 nodes here)."""
+    read of a side."""
     plan = _plan(entrymod.queries()["incremental_near_dup"](spark, SF_DIR))
-    assert plan.count("ArrowEvalPython") == 2, plan[:3000]
+    assert plan.count("ArrowEvalPython") == 1, plan[:3000]
+
+
+@pytest.mark.parametrize("name", ["minhash_near_dup_pairs"])
+def test_pair_estimator_evaluated_once(spark, name):
+    """verified_pairs evaluates the pair estimator once per candidate.  A
+    deterministic estimator UDF gets inlined into the threshold Filter as a
+    second evaluation, and every candidate's two signatures cross into
+    Python twice."""
+    plan = _plan(entrymod.queries()[name](spark, SF_DIR))
+    calls = re.findall(r"ArrowEvalPython \[_udf\(sig1#\d+, sig2#\d+", plan)
+    assert len(calls) == 1, plan[:3000]
