@@ -150,11 +150,6 @@ class PipelineConfig:
     lsh: LSHConfig = field(default_factory=LSHConfig)
     jaccard_threshold: float = 0.7
     checkpoint_dir: str | None = None
-    # > 0: checkpoint the signature stage as a parquet table bucketed (and
-    # sorted) by file_id, so the two id-keyed verification joins scan the
-    # signature table in place and only the (small) candidate-pair side
-    # shuffles — at 100 TB the signature table is the big side
-    sig_buckets: int = 0
 
     def __post_init__(self):
         if self.lsh.num_bands * self.lsh.rows_per_band != self.minhash.num_registers:

@@ -6,9 +6,11 @@ its RDD is gone AND a driver JVM GC has run, which an idle driver does every
 ``spark.cleaner.periodicGC.interval`` (30 min by default): a long-lived
 session can pin one block per call for that long.  So each site that makes
 one records its RDD id in a ``held`` set it owns, and releases that set once
-the frames reading it are dead.  ``sever_plan_identity`` re-wraps an
-executed plan's rows in a fresh frame, so what reads it reuses that one
-execution.
+the frames reading it are dead.  Nothing here reads or writes state the
+session shares with other callers (the persistent-RDD map as a whole, the
+context's checkpoint dir), so concurrent callers on one session never free
+each other's blocks.  ``sever_plan_identity`` re-wraps an executed plan's
+rows in a fresh frame, so what reads it reuses that one execution.
 """
 
 from __future__ import annotations
@@ -17,16 +19,22 @@ from pyspark.sql import DataFrame
 
 
 def persistent_rdd_ids(spark) -> set[int]:
+    """Ids of every RDD persisted on the session, whoever made it.  No
+    package module calls this: freeing a diff of it would free what other
+    callers on the session persisted meanwhile.  It stays for bench.py,
+    bench_extra.py and the tests, which own their whole session."""
     return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
 
 
-def materialize(df: DataFrame, held: set[int], *, reliable: bool = False) -> DataFrame:
-    """Eagerly checkpoint ``df``: a reliable checkpoint to the session's
-    checkpoint dir (no block), else a localCheckpoint whose RDD id is added
-    to ``held``.  The id is read from the result's own LogicalRDD node, so
-    blocks made concurrently by other jobs are never attributed to it."""
-    if reliable:
-        return df.checkpoint(eager=True)
+def materialize(df: DataFrame, held: set[int], *, path: str | None = None) -> DataFrame:
+    """Eagerly materialize ``df``.  With ``path``, write it there as parquet
+    and return a frame reading it back (no block; it survives executor
+    loss).  Else localCheckpoint it and add the block's RDD id to ``held``;
+    the id is read from the result's own LogicalRDD node, so blocks made
+    concurrently by other jobs are never attributed to it."""
+    if path:
+        df.write.mode("overwrite").parquet(path)
+        return df.sparkSession.read.schema(df.schema).parquet(path)
     out = df.localCheckpoint(eager=True)
     held.add(out._jdf.queryExecution().logical().rdd().id())
     return out

@@ -8,11 +8,12 @@ Components in MapReduce and Beyond", SoCC'14 — the algorithm behind
 GraphFrames' connected components), which converges in O(log n) rounds
 even on long chains with permuted ids.
 
-localCheckpoint(eager) truncates the iterative lineage each round; without it
-Catalyst re-derives the full chain of joins every iteration and the plan
-grows without bound (the classic iterative-DataFrame trap).  A round reads
-only the round before it, whose block is freed once the next is
-materialized; the vertex set and the last round stay held for the caller.
+Materializing each round (a localCheckpoint, or parquet under a checkpoint
+dir) truncates the iterative lineage; without it Catalyst re-derives the
+full chain of joins every iteration and the plan grows without bound (the
+classic iterative-DataFrame trap).  A round reads only the round before it,
+whose block is freed once the next is materialized; the vertex set's and
+the last round's blocks go to the caller's ``held``.
 
 The reference repo has no clustering; this stage turns its pairwise joint
 estimates into the cluster assignments required by the north rule
@@ -21,7 +22,10 @@ estimates into the cluster assignments required by the north rule
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import itertools
+import os
+
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..functions.blocks import materialize, release, sever_plan_identity
 
@@ -72,7 +76,8 @@ def _unionfind_partition(pdf):
 
 
 def connected_components(
-    edges: DataFrame, reliable: bool = False, n_edges: int | None = None
+    edges: DataFrame, checkpoint_dir: str | None = None, n_edges: int | None = None,
+    held: set[int] | None = None,
 ) -> DataFrame:
     """(id1, id2) undirected edges -> (id, cluster_id = min reachable id).
 
@@ -102,10 +107,13 @@ def connected_components(
     loose the bound is.  Callers whose edge lineage is expensive to
     recompute should checkpoint it first.
 
-    ``reliable=True`` materializes the loop's rounds with reliable RDD
-    checkpoints to the session's checkpoint dir instead of localCheckpoint:
-    on a real cluster localCheckpoint blocks die with their executor and the
-    truncated lineage cannot be replayed.
+    The loop's rounds are localCheckpoint blocks, or, with
+    ``checkpoint_dir``, parquet written under it as ``r<i>``: on a real
+    cluster localCheckpoint blocks die with their executor and the truncated
+    lineage cannot be replayed.  The blocks the lazy result reads (the
+    vertex set and the last round) are added to ``held`` for the caller to
+    release once it has materialized the result; without ``held`` they stay
+    until the ContextCleaner frees them.
     """
     e2 = edges.select("id1", "id2")
     if n_edges is None or n_edges > SMALL_GRAPH_EDGES:
@@ -116,24 +124,12 @@ def connected_components(
             .groupBy("_g")
             .applyInPandas(_unionfind_partition, "id long, cluster_id long")
         )
-    return _star_components(e2, reliable)
+    return _star_components(e2, checkpoint_dir, held)
 
 
-def _edge_set_stats(e: DataFrame):
-    """(count, hash-xor) fingerprint of a canonical deduped edge set — one
-    aggregation job.  Two equal-cardinality edge sets with equal 64-bit
-    xxhash64 XOR-folds are equal with overwhelming probability (collision
-    needs the symmetric difference's hashes to cancel exactly in GF(2)^64);
-    this replaces the two exceptAll+isEmpty jobs per star round.  bit_xor
-    instead of sum keeps it overflow-free under ANSI mode."""
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr("bit_xor(xxhash64(id1, id2))").alias("h"),
-    ).collect()[0]
-    return row["n"], row["h"]
-
-
-def _star_components(edges: DataFrame, reliable: bool = False) -> DataFrame:
+def _star_components(
+    edges: DataFrame, checkpoint_dir: str | None = None, held: set[int] | None = None
+) -> DataFrame:
     """Alternating large-star/small-star connected components — the loop
     behind ``connected_components`` for edge sets too large for one task.
 
@@ -143,22 +139,35 @@ def _star_components(edges: DataFrame, reliable: bool = False) -> DataFrame:
     Output: (id, cluster_id = min reachable id) for every vertex in the
     input edge list.  Raises rather than returning half-merged clusters if
     ``MAX_ROUNDS`` rounds do not reach the fixed point.
+
+    The fixed point is detected by a (count, hash-xor) fingerprint of each
+    round's edge set, observed on the round's own materialization (no extra
+    job).  Two equal-cardinality edge sets with equal 64-bit xxhash64
+    XOR-folds are equal with overwhelming probability (a collision needs
+    the symmetric difference's hashes to cancel exactly in GF(2)^64).
+    bit_xor instead of sum keeps it overflow-free under ANSI mode.
     """
     spark = edges.sparkSession
+    held = set() if held is None else held
+    written = itertools.count()
 
-    def checkpoint(df: DataFrame, held: set[int]) -> DataFrame:
+    def checkpoint(df: DataFrame, owner: set[int], stats: Observation | None = None) -> DataFrame:
+        if stats is not None:
+            df = df.observe(stats, F.count(F.lit(1)).alias("n"),
+                            F.expr("bit_xor(xxhash64(id1, id2))").alias("h"))
+        path = checkpoint_dir and os.path.join(checkpoint_dir, f"r{next(written)}")
         # sever after the id is read: the severed frame wraps another RDD
-        return sever_plan_identity(materialize(df, held, reliable=reliable))
+        return sever_plan_identity(materialize(df, owner, path=path))
 
-    # pinned: read by every round; prev: the previous round's block
-    pinned: set[int] = set()
+    # prev: the previous round's block
     prev: set[int] = set()
     verts = checkpoint(
         edges.select(F.col("id1").alias("id"))
         .union(edges.select(F.col("id2").alias("id")))
         .distinct(),
-        pinned,
+        held,
     )
+    e_stats = Observation()
     e = checkpoint(
         edges.select(
             F.greatest("id1", "id2").alias("id1"), F.least("id1", "id2").alias("id2")
@@ -166,9 +175,9 @@ def _star_components(edges: DataFrame, reliable: bool = False) -> DataFrame:
         .filter(F.col("id1") != F.col("id2"))
         .dropDuplicates(["id1", "id2"]),
         prev,
+        e_stats,
     )
 
-    e_stats = _edge_set_stats(e)
     for _ in range(MAX_ROUNDS):
         # LARGE-STAR: per node u over its FULL neighborhood, link every
         # strictly-larger neighbor v to m = min(N(u) ∪ {u})
@@ -202,17 +211,18 @@ def _star_components(edges: DataFrame, reliable: bool = False) -> DataFrame:
             .dropDuplicates(["id1", "id2"])
         )
         cur: set[int] = set()
-        e = checkpoint(small, cur)
+        new_stats = Observation()
+        e = checkpoint(small, cur, new_stats)
         release(spark, prev)
         prev = cur
-        new_stats = _edge_set_stats(e)
-        if new_stats == e_stats:
+        if new_stats.get == e_stats.get:
             break
         e_stats = new_stats
     else:
         raise RuntimeError(
             f"connected components did not converge in {MAX_ROUNDS} rounds"
         )
+    held |= prev
 
     return verts.join(
         e.select(F.col("id1").alias("id"), F.col("id2").alias("root")), "id", "left"

@@ -42,7 +42,7 @@ def exact_dedup_against_snapshot(
 
     Shape: the snapshot side reduces to DISTINCT content_sha (map-side
     combinable, single pruned column off the scan — and when the snapshot is
-    stored sha-bucketed, as the pipeline's stage checkpoints are, no shuffle
+    stored bucketed by content_sha, no shuffle
     at all); the new side groups by sha (one shuffle sized by the BATCH, not
     the corpus); survival is one left_anti hash join on the sha.  Per-ingest
     cost is O(|batch|) + a snapshot column scan, never a corpus re-shuffle —

@@ -33,12 +33,15 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..config import PipelineConfig
-from ..functions.blocks import materialize, persistent_rdd_ids, release
-from ..functions.store_fs import delete, read_manifest, write_manifest
+from ..functions.blocks import materialize, release
+from ..functions.store_fs import read_manifest, write_manifest
 from ..functions.udfs import make_minhash_pair_estimator_udf
 from ..operators import lsh as lsh_ops
 from ..operators.clustering import connected_components
 from ..operators.signatures import with_content_sha, with_file_id, with_minhash_signature
+
+# a stage's manifest, beside its parquet under <checkpoint_dir>/<stage>
+MANIFEST = "_MANIFEST.json"
 
 
 @dataclass
@@ -75,6 +78,14 @@ class PipelineResult:
 
 
 class NearDupPipeline:
+    """The staged near-dup job.  A run touches no session-wide state: its
+    blocks are the ones it made (``PipelineResult.release_cache`` frees
+    them), and what it persists lives under its own ``checkpoint_dir``.  So
+    callers may run pipelines concurrently on one session, each with its
+    own object: one object serves one ``run()`` at a time (it holds that
+    run's metrics and block ids).  Two concurrent runs must not share a
+    ``checkpoint_dir`` under the same config."""
+
     def __init__(self, pcfg: PipelineConfig, run_id: str = "run0"):
         self.pcfg = pcfg
         self.run_id = run_id
@@ -88,32 +99,14 @@ class NearDupPipeline:
             return None
         return os.path.join(self.pcfg.checkpoint_dir, stage)
 
-    def _manifest_path(self, stage: str) -> str:
-        return os.path.join(self._stage_dir(stage), "_MANIFEST.json")
-
-    def _read_manifest(self, spark: SparkSession, stage: str) -> dict | None:
-        """The stage's manifest, or None when there is none or it was
-        written under another config (a config change invalidates it)."""
-        if not self._stage_dir(stage):
-            return None
-        manifest = read_manifest(spark, self._manifest_path(stage))
-        if manifest is None or manifest.get("config_hash") != self.pcfg.config_hash():
-            return None
-        return manifest
-
-    def _write_manifest(self, spark: SparkSession, stage: str, **fields) -> None:
-        write_manifest(spark, self._manifest_path(stage), {
-            "stage": stage,
-            "run_id": self.run_id,
-            "config_hash": self.pcfg.config_hash(),
-            **fields,
-        })
-
     def _try_resume(self, spark: SparkSession, stage: str) -> DataFrame | None:
-        manifest = self._read_manifest(spark, stage)
-        if manifest is None:
+        """The stage's parquet, or None when it has no manifest or one
+        written under another config (a config change invalidates it)."""
+        d = self._stage_dir(stage)
+        manifest = d and read_manifest(spark, os.path.join(d, MANIFEST))
+        if not manifest or manifest.get("config_hash") != self.pcfg.config_hash():
             return None
-        out = spark.read.parquet(self._stage_dir(stage))
+        out = spark.read.parquet(d)
         self.metrics.append(
             StageMetrics(stage, manifest["rows"], 0.0, True, out.rdd.getNumPartitions())
         )
@@ -143,76 +136,31 @@ class NearDupPipeline:
             .withColumn("_config_hash", F.lit(self.pcfg.config_hash()))
             .withColumn("_run_id", F.lit(self.run_id))
         )
-        annotated.write.mode("overwrite").parquet(d)
-        spark = df.sparkSession
-        out = spark.read.parquet(d)
+        out = materialize(annotated, self._ckpt_rdd_ids, path=d)
         per_part = (
             out.groupBy(F.spark_partition_id().alias("pid"))
             .count()
             .collect()
         )
         rows = int(sum(r["count"] for r in per_part))
-        self._write_manifest(
-            spark,
-            stage,
-            rows=rows,
-            partitions={str(r["pid"]): r["count"] for r in per_part},
-            seconds=time.time() - t0,
-        )
+        write_manifest(df.sparkSession, os.path.join(d, MANIFEST), {
+            "stage": stage,
+            "run_id": self.run_id,
+            "config_hash": self.pcfg.config_hash(),
+            "rows": rows,
+            "partitions": {str(r["pid"]): r["count"] for r in per_part},
+            "seconds": time.time() - t0,
+        })
         self.metrics.append(
             StageMetrics(stage, rows, time.time() - t0, False, len(per_part))
         )
         return out.drop("_stage", "_config_hash", "_run_id")
 
-    def _stage_bucketed_table(
-        self, spark: SparkSession, name: str, build, bucket_col: str, n_buckets: int
-    ) -> DataFrame:
-        """Checkpoint a stage as a parquet table bucketed+sorted by
-        ``bucket_col``: downstream equi-joins on that column scan the table
-        in place (no Exchange on this side).  Resume semantics match the
-        path-based checkpoint (config hash in the manifest), with one open
-        fault: resume also needs the ``ssp_<name>_*`` table in the
-        session catalog, so a NEW session (empty catalog) rebuilds this
-        stage even though the manifest and the table files survive; the
-        other stages still resume from their parquet."""
-        table = f"ssp_{name}_{self.pcfg.config_hash()[:12]}"
-        t0 = time.time()
-        manifest = self._read_manifest(spark, name)
-        if manifest is not None and spark.catalog.tableExists(table):
-            out = spark.table(table)
-            self.metrics.append(
-                StageMetrics(name, manifest["rows"], 0.0, True, out.rdd.getNumPartitions())
-            )
-            return out
-        df = build()
-        # a fresh session has an empty catalog, but the managed-table
-        # LOCATION from a previous session may survive on disk — drop both
-        # or saveAsTable fails with LOCATION_ALREADY_EXISTS
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        delete(spark, os.path.join(warehouse, table))
-        (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(n_buckets, bucket_col)
-            .sortBy(bucket_col)
-            .saveAsTable(table)
-        )
-        out = spark.table(table)
-        rows = out.count()
-        if self._stage_dir(name):
-            self._write_manifest(
-                spark, name, rows=rows, table=table, buckets=n_buckets, seconds=time.time() - t0
-            )
-        self.metrics.append(
-            StageMetrics(name, rows, time.time() - t0, False, out.rdd.getNumPartitions())
-        )
-        return out
-
     def _stage(self, spark: SparkSession, name: str, build, materialize: bool = True) -> DataFrame:
         resumed = self._try_resume(spark, name)
         if resumed is not None:
             return resumed
+        t0 = time.time()
         if not materialize and not self._stage_dir(name):
             # in-memory mode only: a stage consumed exactly once downstream
             # needs no checkpoint barrier — materializing it is one extra
@@ -221,19 +169,10 @@ class NearDupPipeline:
             # persists to parquet (the resume/lineage contract is
             # unchanged); its cost is then timed inside the consuming
             # stage's metrics entry.
-            t0 = time.time()
             out = build()
             self.metrics.append(StageMetrics(name, -1, time.time() - t0, False, -1))
             return out
-        t0 = time.time()
-        before = persistent_rdd_ids(spark)
-        out = self._checkpoint(build(), name, t0)
-        # what build() left persistent (the CC loop's last blocks, which
-        # feed its lazy result) is dead once the stage is checkpointed.
-        # This diff would also free blocks that CONCURRENT jobs on the
-        # session persist meanwhile: lock before running pipelines in parallel
-        release(spark, persistent_rdd_ids(spark) - before - self._ckpt_rdd_ids)
-        return out
+        return self._checkpoint(build(), name, t0)
 
     # -- pipeline -----------------------------------------------------------
 
@@ -271,15 +210,13 @@ class NearDupPipeline:
             base.join(reps.withColumnRenamed("rep_id", "file_id"), ["content_sha", "file_id"])
             .select("file_id", content_col)
         )
-        sig_build = lambda: with_minhash_signature(rep_rows, self.pcfg, content_col).select(
-            "file_id", "sig", "bands", "n_shingles"
+        signatures = self._stage(
+            spark,
+            "signatures",
+            lambda: with_minhash_signature(rep_rows, self.pcfg, content_col).select(
+                "file_id", "sig", "bands", "n_shingles"
+            ),
         )
-        if self.pcfg.sig_buckets > 0:
-            signatures = self._stage_bucketed_table(
-                spark, "signatures", sig_build, "file_id", self.pcfg.sig_buckets
-            )
-        else:
-            signatures = self._stage(spark, "signatures", sig_build)
 
         candidates = self._stage(
             spark,
@@ -299,21 +236,21 @@ class NearDupPipeline:
         )
 
         edges = verified.select("id1", "id2").union(exact_edges.select("id1", "id2"))
-        # with a checkpoint dir, the CC loop uses RELIABLE rdd checkpoints
-        # (localCheckpoint blocks don't survive executor loss on a cluster)
-        reliable_cc = bool(self.pcfg.checkpoint_dir)
-        if reliable_cc:
-            spark.sparkContext.setCheckpointDir(
-                os.path.join(self.pcfg.checkpoint_dir, "_cc_rdd_ckpt")
-            )
         # a bound on the edges from counts already taken: every file that is
         # not its content's representative gives one exact edge, so there
         # are fewer exact edges than identity rows
         n_edges = sum(m.rows for m in self.metrics if m.name in ("identity", "verified_pairs"))
+        # with a checkpoint dir the CC loop's rounds are parquet under it
+        # (localCheckpoint blocks don't survive executor loss on a cluster);
+        # its blocks only feed the lazy components, dead once checkpointed
+        cc_held: set[int] = set()
         components = self._stage(
             spark, "clusters",
-            lambda: connected_components(edges, reliable=reliable_cc, n_edges=n_edges),
+            lambda: connected_components(
+                edges, checkpoint_dir=self._stage_dir("_cc"), n_edges=n_edges, held=cc_held
+            ),
         )
+        release(spark, cc_held)
 
         # every file gets an assignment; singletons cluster with themselves
         assignment = (

@@ -78,39 +78,6 @@ def test_config_change_invalidates_checkpoint(spark, tmp_path):
     assert all(not m.resumed for m in pipe.metrics)
 
 
-def test_bucketed_signature_checkpoint(spark, tmp_path):
-    """sig_buckets>0: signature stage is a bucketed table; results equal the
-    unbucketed run; the verification join's signature side carries no
-    Exchange (bucketed scan feeds the join directly)."""
-    import dataclasses
-
-    from pyspark.sql import functions as F
-
-    from set_sketch_paper_spark.functions.udfs import make_minhash_pair_estimator_udf
-    from set_sketch_paper_spark.operators import lsh as lsh_ops
-
-    files = files_table(spark, N_ROWS, seed=42)
-    plain = NearDupPipeline(_pcfg(str(tmp_path / "p1"))).run(
-        files, id_cols=("repo", "path", "commit")
-    )
-    cfg_b = dataclasses.replace(_pcfg(str(tmp_path / "p2")), sig_buckets=8)
-    bucketed_pipe = NearDupPipeline(cfg_b)
-    bucketed = bucketed_pipe.run(files, id_cols=("repo", "path", "commit"))
-    assert sorted(map(tuple, plain.clusters.collect())) == sorted(
-        map(tuple, bucketed.clusters.collect())
-    )
-
-    # plan check: joining candidate pairs against the bucketed signature
-    # table must not exchange the signature side
-    table = f"ssp_signatures_{cfg_b.config_hash()[:12]}"
-    sigs = spark.table(table)
-    pairs = lsh_ops.candidate_pairs(sigs, cfg_b.lsh, id_col="file_id")
-    est = make_minhash_pair_estimator_udf(cfg_b.minhash, "original")
-    ver = lsh_ops.verified_pairs(pairs, sigs, est, 0.5, id_col="file_id")
-    plan = ver._jdf.queryExecution().executedPlan().toString()
-    assert "SelectedBucketsCount" in plan or "Bucketed: true" in plan, plan[:2000]
-
-
 def test_result_csv_roundtrip_with_config_header(spark, tmp_path):
     """Reference-style result sink (appendInfo header, sketch.hpp:1969-2018):
     the descriptor line survives a round-trip and pins the exact config."""

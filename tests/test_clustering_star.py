@@ -1,7 +1,8 @@
 """Connected components: the union-find fast path, the large-star/
-small-star loop (plain and reliable-checkpoint) and the bare union-find
-kernel give identical cluster assignments on shared graphs, including the
-adversarial long-chain shapes the star algorithm exists for."""
+small-star loop (rounds as blocks, and as parquet under a checkpoint dir)
+and the bare union-find kernel give identical cluster assignments on shared
+graphs, including the adversarial long-chain shapes the star algorithm
+exists for."""
 
 from __future__ import annotations
 
@@ -25,8 +26,8 @@ def _check_all_equal(spark, edge_rows, tmp_path):
     edges = spark.createDataFrame(edge_rows, "id1 long, id2 long")
     a = _clusters(connected_components(edges))  # small-graph union-find path
     assert a == _clusters(_star_components(edges))  # fast path == loop
-    spark.sparkContext.setCheckpointDir(str(tmp_path))
-    assert a == _clusters(_star_components(edges, reliable=True))
+    # rounds as parquet under a checkpoint dir instead of blocks
+    assert a == _clusters(_star_components(edges, checkpoint_dir=str(tmp_path)))
     uf = _unionfind_partition(pd.DataFrame(edge_rows, columns=["id1", "id2"]))
     assert a == dict(zip(uf["id"].tolist(), uf["cluster_id"].tolist()))
     return a
