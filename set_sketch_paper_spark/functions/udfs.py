@@ -216,8 +216,8 @@ def make_minhash_cardinality_udf():
     return _udf
 
 
-def make_register_cardinality_udf(cfg, use_ml: bool = False):
-    """binary registers -> estimated cardinality (sketch.hpp:320-381)."""
+def make_register_cardinality_udf(cfg):
+    """binary registers -> simple cardinality estimate (sketch.hpp:320-338)."""
     is_ghll = isinstance(cfg, GHLLConfig)
     a = (1.0 / cfg.num_registers) if is_ghll else cfg.a
     dtype = np.dtype(cfg.dtype)
@@ -228,8 +228,7 @@ def make_register_cardinality_udf(cfg, use_ml: bool = False):
             cfg.q, a, cfg.base, cfg.num_registers, is_ghll, False, False
         )
         mat = np.vstack([np.frombuffer(s, dtype=dtype) for s in states])
-        vals = est.cardinality_ml(mat) if use_ml else est.cardinality_simple(mat)
-        return pd.Series(vals)
+        return pd.Series(est.cardinality_simple(mat))
 
     return _udf
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.types import LongType
 
 from ..config import PipelineConfig, ShingleConfig
@@ -281,6 +281,7 @@ def ngram_jaccard_pairs(
     # ONE per-doc collect produces everything doc-local: full distinct-gram
     # count n (hot included), the rarity-sorted non-hot hash array (verify
     # side), and its prefix (candidate side) — no corpus-wide window
+    qlo_obs = Observation()
     per_doc = (
         dx.join(freq, "g")
         .groupBy("_id")
@@ -306,6 +307,9 @@ def ngram_jaccard_pairs(
             ),
         )
         .select("_id", "n", "garr", "prefarr")
+        # qlo (see the counting aggregate below) rides on the checkpoint's
+        # own job instead of a one-row collect of its own
+        .observe(qlo_obs, F.least(F.lit(prefix_q), F.min(_tau(F.col("n")))).alias("qlo"))
         # consumed three times (prefix index + both verify joins); without
         # this the whole dedup->freq->join->collect chain re-runs per
         # consumer.  localCheckpoint, not persist (same rationale as the
@@ -338,12 +342,7 @@ def ngram_jaccard_pairs(
     # exact per-pair filter runs after the n re-attach on the few
     # survivors.  Narrowing the hash key this way measured 5.2s -> 4.3s
     # warm (18.8 -> 6.5 cold) on the 116M-pair-row sf1.0-scale aggregate.
-    # The one-row qlo aggregate runs on the already-checkpointed per_doc
-    # (same trivial-collect pattern as the CC convergence counts).
-    qlo_row = per_doc.agg(
-        F.least(F.lit(prefix_q), F.min(_tau(F.col("n")))).alias("qlo")
-    ).collect()
-    qlo = qlo_row[0]["qlo"]
+    qlo = qlo_obs.get["qlo"]
     if qlo is None:  # empty input: no pairs regardless
         qlo = min_shared
     expand = (

@@ -25,18 +25,17 @@ non-full sketch IS the exact distinct set.
 
 Scale shape (the part DuckDB does naively and Spark must not):
 
-  partial:  mapInPandas over the input partitions — per task, per key, keep
-            the bottom-k of the distinct hashes seen so far.  Elements never
-            shuffle; only <=k-element partial states do.  Per-task memory is
-            O(keys_in_flight * k) with a flush cap, exactly the
-            spill-on-pressure shape of operators/sketch_agg.py.
+  partial:  sketch_agg's per-key partial loop over the input partitions —
+            per task, per key, keep the bottom-k of the distinct hashes seen
+            so far.  Elements never shuffle; only <=k-element partial states
+            do.  Per-task memory is O(keys_in_flight * k) with a flush cap.
   final:    ONE groupBy(keys) merging partials with built-in expressions
             (flatten -> array_distinct -> array_sort -> slice) — JVM-side,
             whole-stage-codegen friendly, no Python in the merge.
 
 Bottom-k states do NOT merge element-wise (unlike GHLL max / MinHash min
-registers): merge is multiset-union-then-slice, which is why this lives
-outside sketch_agg's element-wise combine contract.
+registers): merge is multiset-union-then-slice, so KMV binds its own kernel
+and combine to that loop.
 
 Hash: the top 60 bits of md5 as a non-negative int64 —
   Spark:  conv(substring(md5(CAST(x AS STRING)), 1, 15), 16, 10) :: long
@@ -47,11 +46,10 @@ engines; collision probability over n distinct elements is ~n^2/2^61.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
+
+from .sketch_agg import _partial_mapper
 
 _HASH_BITS = 60
 _HASH_SPACE = float(2**_HASH_BITS)
@@ -251,65 +249,38 @@ def kmv_setops_sql(ks1: str, ks2: str, k: int) -> str:
     )
 
 
-def _bottom_k_partials(
-    keys: list[str], k: int, flush_keys: int
-) -> "callable":
-    """mapInPandas fn: per task, per key tuple, running bottom-k of distinct
-    hashes across Arrow batches; flushes early past ``flush_keys`` in-flight
-    keys (associative merge makes any flush pattern correct)."""
+def _bottom_k_family(k: int):
+    """(kernel, combine, encode) binding bottom-k to sketch_agg's per-key
+    partial loop.  The kernel lexsorts a batch by (group, value), drops
+    repeats within a group and keeps each group's first k; two states
+    merge by union-then-slice."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state: dict[tuple, np.ndarray] = {}
+    def kernel(values, offsets):
+        n = len(offsets) - 1
+        grp = np.repeat(np.arange(n), np.diff(offsets))
+        v = values[np.lexsort((values, grp))]  # grp is already sorted
+        first = np.ones(len(v), dtype=bool)
+        first[1:] = (v[1:] != v[:-1]) | (grp[1:] != grp[:-1])
+        v, g = v[first], grp[first]
+        top = np.arange(len(g)) - np.searchsorted(g, g) < k
+        v, g = v[top], g[top]
+        ends = np.searchsorted(g, np.arange(n + 1)).tolist()
+        return [v[a:b] for a, b in zip(ends[:-1], ends[1:])]
 
-        def emit() -> pd.DataFrame:
-            out = pd.DataFrame(
-                [kt + (st.tolist(),) for kt, st in state.items()],
-                columns=keys + ["ks"],
-            )
-            state.clear()
-            return out
+    def combine(a, b):
+        return np.unique(np.concatenate([a, b]))[:k]
 
-        def norm(x):
-            # pandas encodes a NULL group key as NaN/None; emit it as None
-            # so Arrow writes a genuine null and the final Spark groupBy
-            # keeps the NULL-key group (a plain Spark groupBy does; pandas'
-            # default dropna=True silently lost it — ADVICE r5)
-            return None if x is None or (isinstance(x, float) and np.isnan(x)) else x
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            hs = pdf["__h"].to_numpy(dtype=np.int64)
-            for kt, idx in pdf.groupby(keys, sort=False, dropna=False).indices.items():
-                kt = kt if isinstance(kt, tuple) else (kt,)
-                kt = tuple(norm(x) for x in kt)
-                merged = hs[idx]
-                prev = state.get(kt)
-                if prev is not None:
-                    merged = np.concatenate([prev, merged])
-                state[kt] = np.unique(merged)[:k]
-            if len(state) > flush_keys:
-                yield emit()
-        if state:
-            yield emit()
-
-    return fn
+    return kernel, combine, np.ndarray.tolist
 
 
-def kmv_distinct(
-    df: DataFrame,
-    keys,
-    value_col: str,
-    k: int = 256,
-    flush_keys: int = 100_000,
-) -> DataFrame:
+def kmv_distinct(df: DataFrame, keys, value_col: str, k: int = 256) -> DataFrame:
     """Per-key KMV sketch of distinct ``value_col`` values: (keys..., ks).
 
     Stage 1 never shuffles elements — each task emits <=k-element partial
     states per key it holds; stage 2 is ONE groupBy(keys) whose merge is
     pure built-in array algebra (kmv_merge_col).  Feed the result to
     with_kmv_estimate for (n_sk, kth_v, est_q)."""
-    from ..operators.signatures import widen_if_narrow
+    from .signatures import widen_if_narrow
 
     keys = [keys] if isinstance(keys, str) else list(keys)
     clash = sorted({"__v", "__h"} & set(keys))
@@ -338,7 +309,7 @@ def kmv_distinct(
         if f.name in keys
     ) + ", ks array<bigint>"
     partials = hashed.mapInPandas(
-        _bottom_k_partials(keys, k, flush_keys), schema=schema
+        _partial_mapper(keys, "__h", "ks", _bottom_k_family(k)), schema=schema
     )
     return partials.groupBy(*keys).agg(
         kmv_merge_col(F.collect_list("ks"), k).alias("ks")

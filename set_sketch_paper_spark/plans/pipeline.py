@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..config import PipelineConfig
 from ..functions.blocks import materialize, release
-from ..functions.store_fs import read_manifest, write_manifest
+from ..functions.store_fs import delete, read_manifest, write_manifest
 from ..functions.udfs import make_minhash_pair_estimator_udf
 from ..operators import lsh as lsh_ops
 from ..operators.clustering import connected_components
@@ -242,15 +242,19 @@ class NearDupPipeline:
         n_edges = sum(m.rows for m in self.metrics if m.name in ("identity", "verified_pairs"))
         # with a checkpoint dir the CC loop's rounds are parquet under it
         # (localCheckpoint blocks don't survive executor loss on a cluster);
-        # its blocks only feed the lazy components, dead once checkpointed
+        # its blocks and rounds only feed the lazy components, dead once the
+        # clusters stage is persisted
         cc_held: set[int] = set()
+        cc_dir = self._stage_dir("_cc")
         components = self._stage(
             spark, "clusters",
             lambda: connected_components(
-                edges, checkpoint_dir=self._stage_dir("_cc"), n_edges=n_edges, held=cc_held
+                edges, checkpoint_dir=cc_dir, n_edges=n_edges, held=cc_held
             ),
         )
         release(spark, cc_held)
+        if cc_dir:
+            delete(spark, cc_dir)
 
         # every file gets an assignment; singletons cluster with themselves
         assignment = (

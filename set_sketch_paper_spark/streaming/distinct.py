@@ -46,10 +46,7 @@ def check_or_write_kmv_manifest(
     )
 
 
-def foreach_batch_kmv_distinct(
-    store_path: str, keys, value_col: str, k: int = 256,
-    flush_keys: int = 100_000,
-):
+def foreach_batch_kmv_distinct(store_path: str, keys, value_col: str, k: int = 256):
     """foreachBatch hook: sketch the micro-batch's per-key distinct values
     and overwrite this batch's own store partition (idempotent on replay).
 
@@ -65,7 +62,7 @@ def foreach_batch_kmv_distinct(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         check_or_write_kmv_manifest(store_path, keys, value_col, k, spark)
-        sk = kmv_distinct(batch_df, keys, value_col, k=k, flush_keys=flush_keys)
+        sk = kmv_distinct(batch_df, keys, value_col, k=k)
         sk.write.mode("overwrite").parquet(
             os.path.join(store_path, f"batch_id={batch_id}")
         )

@@ -29,6 +29,7 @@ from set_sketch_paper_spark.config import (
 from set_sketch_paper_spark.functions.blocks import materialize, release
 from set_sketch_paper_spark.operators import clustering
 from set_sketch_paper_spark.operators.clustering import _star_components
+from set_sketch_paper_spark.plans import pipeline
 from set_sketch_paper_spark.plans.pipeline import NearDupPipeline
 from set_sketch_paper_spark.sources.synthetic import files_table
 
@@ -130,12 +131,21 @@ def test_pipeline_release_cache(spark, files300, serial_labels, tmp_path, monkey
     # idempotent
     assert result.release_cache() == 0
 
-    # with a checkpoint dir the loop's rounds are parquet under it; the
-    # context-wide checkpoint dir is never touched
+    # with a checkpoint dir the loop's rounds are parquet under it, deleted
+    # once the clusters stage has persisted its own; the context-wide
+    # checkpoint dir is never touched
     ckpt_dir = spark.sparkContext.getCheckpointDir()
     pcfg = dataclasses.replace(PCFG, checkpoint_dir=str(tmp_path / "ckpt"))
+    deleted = []
+    real_delete = pipeline.delete
+    monkeypatch.setattr(
+        pipeline, "delete", lambda s, path: deleted.append((path, real_delete(s, path)))
+    )
     assert _run_labels(files300, pcfg) == serial_labels
-    assert (tmp_path / "ckpt" / "_cc" / "r0").is_dir()
+    # True: the rounds were there to delete
+    assert deleted == [(str(tmp_path / "ckpt" / "_cc"), True)]
+    assert not (tmp_path / "ckpt" / "_cc").exists()
+    assert (tmp_path / "ckpt" / "clusters").is_dir()
     assert spark.sparkContext.getCheckpointDir() == ckpt_dir
 
 

@@ -17,6 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import Row, functions as F
 
+from set_sketch_paper_spark.operators import sketch_agg
 from set_sketch_paper_spark.operators.kmv import (
     kmv_distinct,
     kmv_from_array,
@@ -61,12 +62,14 @@ def test_kmv_distinct_matches_brute_force_and_layout_invariant(spark):
         assert got == expected, parts
 
 
-def test_kmv_distinct_flush_cap_and_null_values(spark):
+def test_kmv_distinct_flush_cap_and_null_values(spark, monkeypatch):
+    # the partial loop reads its flush cap when kmv_distinct builds it
+    monkeypatch.setattr(sketch_agg, "FLUSH_KEYS", 1)
     rows = [Row(g="a", v=i) for i in range(300)] + [Row(g="b", v=None)]
     df = spark.createDataFrame(rows, schema="g string, v int")
     out = {
         r["g"]: list(r["ks"])
-        for r in kmv_distinct(df, "g", "v", k=8, flush_keys=1).collect()
+        for r in kmv_distinct(df, "g", "v", k=8).collect()
     }
     assert out["a"] == bottom_k(range(300), 8)
     # the all-NULL key contributes no elements and therefore no row
@@ -223,11 +226,16 @@ from hypothesis import given, settings, strategies as st
 )
 def test_partial_merge_algebra_property(vals, k, n_batches, flush, data):
     """For ANY value multiset, batch split, flush cap, and key mix: merging
-    the emitted partial states (union -> distinct -> sort -> slice k) equals
-    the brute-force bottom-k per key — the invariant that makes kmv_distinct
-    partitioning- and flush-pattern-invariant."""
+    the emitted partial states equals the one-shot state per key — for the
+    bottom-k binding of the one per-key partial loop (union -> distinct ->
+    sort -> slice k == brute-force bottom-k) and for its GHLL binding
+    (element-wise max == one-shot registers).  The invariant that makes
+    kmv_distinct and sketch_distinct partitioning- and flush-invariant."""
     import pandas as pd
-    from set_sketch_paper_spark.operators.kmv import _bottom_k_partials
+    from set_sketch_paper_spark.config import GHLLConfig
+    from set_sketch_paper_spark.operators.kmv import _bottom_k_family
+    from set_sketch_paper_spark.sketchlib.ghll import ghll_sketches_batch
+    from set_sketch_paper_spark.sketchlib.hashing import u64_from_i64
 
     keys = [data.draw(st.sampled_from(["x", "y"])) for _ in vals]
     hashes = [md5_60(v) for v in vals]
@@ -239,12 +247,30 @@ def test_partial_merge_algebra_property(vals, k, n_batches, flush, data):
         df.iloc[a:b].reset_index(drop=True)
         for a, b in zip([0] + cuts, cuts + [len(df)])
     ]
-    fn = _bottom_k_partials(["g"], k, flush)
-    merged: dict[str, set] = {}
-    for out in fn(iter(batches)):
-        for _, row in out.iterrows():
-            merged.setdefault(row["g"], set()).update(row["ks"])
-    for g in set(keys):
-        want = sorted({h for kk, h in zip(keys, hashes) if kk == g})[:k]
-        got = sorted(merged.get(g, set()))[:k]
-        assert got == want, (g, k, flush)
+    cfg = GHLLConfig(num_registers=64, q=62)
+
+    def ghll_one_shot(hs):
+        regs, _ = ghll_sketches_batch(
+            u64_from_i64(np.array(hs, dtype=np.int64)), np.array([0, len(hs)]),
+            cfg.num_registers, cfg.base, cfg.q, cfg.seed,
+        )
+        return regs[0].tobytes()
+
+    bindings = [
+        (sketch_agg._partial_mapper(["g"], "__h", "ks", _bottom_k_family(k), flush),
+         lambda states: sorted(set().union(*states))[:k],
+         lambda hs: sorted(set(hs))[:k]),
+        (sketch_agg.make_partition_partial_mapper(cfg, ["g"], "__h", flush_keys=flush),
+         lambda states: np.maximum.reduce(
+             [np.frombuffer(s, dtype=np.uint8) for s in states]).tobytes(),
+         ghll_one_shot),
+    ]
+    for mapper, merge, one_shot in bindings:
+        states: dict[str, list] = {}
+        for out in mapper(iter(batches)):
+            for row in out.itertuples(index=False, name=None):
+                states.setdefault(row[0], []).append(row[1])
+        assert states.keys() == set(keys)
+        for g, sts in states.items():
+            want = one_shot([h for kk, h in zip(keys, hashes) if kk == g])
+            assert merge(sts) == want, (g, k, flush)

@@ -1,7 +1,7 @@
 """Partition-bounded two-stage sketch aggregation: accuracy vs exact distinct
 counts, partitioning invariance (the algebraic-merge contract), bounded
-per-task memory under hot keys (flush path), and agreement with Spark's
-built-in HLL++ sanity check (SURVEY.md §4)."""
+per-task memory under hot keys (flush path), NULL-key groups, and agreement
+with Spark's built-in HLL++ sanity check (SURVEY.md §4)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from set_sketch_paper_spark.config import GHLLConfig, MinHashConfig, SetSketchConfig
+from set_sketch_paper_spark.operators.kmv import _bottom_k_family
 from set_sketch_paper_spark.operators.sketch_agg import (
+    _partial_mapper,
     make_partition_partial_mapper,
     sketch_distinct,
 )
@@ -57,19 +59,16 @@ def test_sketch_distinct_accuracy(events, cfg, tol):
 def test_sketch_distinct_partitioning_invariant(events):
     """Element-wise merge is associative/commutative, so the merged sketch —
     and therefore the estimate — must be bit-identical for ANY partitioning
-    of the input (1 task vs 16 tasks vs the intermediate merge tier)."""
+    of the input (1 task vs 16 tasks)."""
     cfg = GHLLConfig(num_registers=1024, q=62)
 
-    def run(df, **kw):
+    def run(df):
         return {
             r["event_type"]: (r["est_distinct"], bytes(r["sketch"]))
-            for r in sketch_distinct(df, ["event_type"], "user_hash", cfg, **kw).collect()
+            for r in sketch_distinct(df, ["event_type"], "user_hash", cfg).collect()
         }
 
-    a = run(events.repartition(1))
-    b = run(events.repartition(16, "user_hash"))
-    c = run(events.repartition(16, "user_hash"), merge_fanin=4)
-    assert a == b == c
+    assert run(events.repartition(1)) == run(events.repartition(16, "user_hash"))
 
 
 def test_partial_mapper_hot_key_bounded(spark):
@@ -133,13 +132,56 @@ def test_sketch_distinct_vs_builtin_hll(events):
         assert abs(ours[k] - builtin[k]) / builtin[k] < 0.15
 
 
-@pytest.mark.parametrize("key,merge_fanin", [
-    ("sketch", None), ("est_distinct", None), ("_mb", 4),
-])
-def test_sketch_distinct_rejects_internal_key_names(spark, key, merge_fanin):
+@pytest.mark.parametrize("key", ["sketch", "est_distinct"])
+def test_sketch_distinct_rejects_internal_key_names(spark, key):
     """A key named like one of sketch_distinct's own columns is refused by
     name, not silently overwritten by the estimate (`est_distinct`) or left
-    to an AnalysisException (`sketch`, and `_mb` under merge_fanin)."""
+    to an AnalysisException (`sketch`)."""
     df = spark.createDataFrame([("a", 1)], schema=f"`{key}` string, h long")
     with pytest.raises(ValueError, match=key):
-        sketch_distinct(df, [key], "h", GHLLConfig(num_registers=64), merge_fanin=merge_fanin)
+        sketch_distinct(df, [key], "h", GHLLConfig(num_registers=64))
+
+
+def test_sketch_distinct_keeps_null_key_group(spark):
+    """A NULL key value is a legitimate group (Spark groupBy and the DuckDB
+    oracle both keep it), for a string key and for a numeric key, which
+    pandas hands the partial loop as NaN: its merged sketch is the one-shot
+    sketch of its elements."""
+    cfg = GHLLConfig(num_registers=256, q=62)
+    for key_type, a in (("string", "a"), ("bigint", 1)):
+        rows = [(None, i) for i in range(50)] + [(a, i) for i in range(20)]
+        df = spark.createDataFrame(rows, schema=f"g {key_type}, v long")
+        hashed = df.repartition(3).withColumn("h", F.xxhash64("v"))
+        got = {
+            r["g"]: bytes(r["sketch"])
+            for r in sketch_distinct(hashed, ["g"], "h", cfg).collect()
+        }
+        elements: dict = {}
+        for r in hashed.collect():
+            elements.setdefault(r["g"], []).append(r["h"])
+        assert got.keys() == elements.keys() == {None, a}, key_type
+        for key, hs in elements.items():
+            regs, _ = ghll_sketches_batch(
+                u64_from_i64(np.array(hs, dtype=np.int64)), np.array([0, len(hs)]),
+                cfg.num_registers, cfg.base, cfg.q, cfg.seed,
+            )
+            assert got[key] == regs[0].tobytes(), (key_type, key)
+
+
+def test_partial_mapper_one_null_key_partial_per_task():
+    """NaN (pandas' NULL for a numeric key) never equals itself as a dict
+    key: normalized once, a NULL key keeps ONE running state per task, so
+    five batches still emit one NULL-key partial, not one per batch."""
+    batches = [
+        pd.DataFrame({"k": [np.nan, 1.0, np.nan], "h": np.arange(3, dtype=np.int64) + 3 * i})
+        for i in range(5)
+    ]
+    bindings = [
+        (make_partition_partial_mapper(GHLLConfig(num_registers=64, q=62), ["k"], "h"),
+         "sketch"),
+        (_partial_mapper(["k"], "h", "ks", _bottom_k_family(8)), "ks"),
+    ]
+    for mapper, col in bindings:
+        out = pd.concat(list(mapper(iter(batches))), ignore_index=True)
+        assert int(out["k"].isna().sum()) == 1, col
+        assert len(out) == 2, col
